@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components over an edge list — the missing half of
@@ -25,31 +25,41 @@ import org.apache.spark.sql.functions._
   * deterministic and oracle-checkable (a transitive-closure recursive CTE
   * computes the same labels).
   *
-  * Scale notes (100 TB): per-iteration state is only the oriented distinct
-  * edge list, shuffled on node id — nothing is ever collected to the
-  * driver. Each iteration persists its edge set and unpersists the
-  * previous one; convergence is a count+checksum metric OBSERVED on the
-  * checkpoint job itself (two longs to the driver per round, no separate
-  * action). Lineage is cut with a localCheckpoint every round so plan
-  * analysis stays O(1) per iteration instead of growing with the round
-  * count.
+  * Residual cutover: before EVERY round (and on the oriented input) the
+  * edge count observed on the last checkpoint is compared with
+  * `localEdgeLimit`; once it fits, the remaining edges are collected and
+  * solved by union-find. A star round keeps the node set and each
+  * component's minimum, so any round's edge set gives the fixpoint's labels
+  * exactly. Inputs above the limit whose star forest fits under it (dense
+  * near-duplicate clusters) leave the distributed path after a round or
+  * two; a long path or a million-spoke star stays distributed to the
+  * fixpoint, and `localEdgeLimit = 0` keeps the full distributed path.
+  *
+  * Scale notes (100 TB): per-round state is the oriented distinct edge
+  * list, shuffled on node id, checkpointed each round (cache + lineage cut)
+  * with its count+checksum convergence metric OBSERVED on that same job;
+  * the driver sees at most `localEdgeLimit` edges. Every phase's jobs are
+  * described (`cc.orient`, `cc.round<i>`, `cc.local edges=<n>`,
+  * `cc.labels`), so a listener sees which path ran.
   */
 object ConnectedComponents {
 
-  /** Session conf key for [[run]]'s small-graph cutover (edge count at or
-    * below which the component labeling runs driver-side); default 100000
-    * oriented distinct edges = ~1.6 MB collected — the same order as a
-    * broadcast-join build side. Deployments tune it like any join
-    * threshold; 0 disables the local path outright. */
+  /** Session conf key for [[run]]'s driver-side cutover (edge count at or
+    * below which the rest runs by union-find); default 100000 edges = ~1.6 MB
+    * collected, a broadcast build side's size class. 0 disables the local
+    * path; a value above [[LocalEdgeLimitMax]] is rejected where it is read. */
   val LocalEdgeLimitKey = "spark.graft.graph.localEdgeLimit"
   val LocalEdgeLimitDefault = 100000L
+  /** Hard cap on [[LocalEdgeLimitKey]]: ~160 MB of edges collected. */
+  val LocalEdgeLimitMax = 10000000L
 
   /** Component labels for every node appearing in `edges`.
     *
     * @param edges  DataFrame with two id columns (castable to long);
     *               self-loops, duplicates and reversed duplicates are fine.
-    * @param localEdgeLimit small-graph cutover (edges); negative = read the
-    *               [[LocalEdgeLimitKey]] session conf.
+    * @param localEdgeLimit driver-side cutover (edges); 0 = always
+    *               distributed; negative = read the [[LocalEdgeLimitKey]]
+    *               session conf.
     * @return       DataFrame(node LONG, component LONG) — one row per
     *               distinct node; `component` is the minimum node id of the
     *               node's connected component. Isolated ids that never
@@ -59,101 +69,97 @@ object ConnectedComponents {
           maxIter: Int = 25, localEdgeLimit: Long = -1L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
+    import Phase.described
+    val limit = edgeLimit(spark, localEdgeLimit)
 
     // Orient (u > v), drop self-loops and duplicates: the canonical edge
-    // form both star steps preserve. Every iteration's edge set is
-    // localCheckpoint'd EAGERLY: the checkpoint is simultaneously the
-    // cache (next round reads blocks, not lineage) and the plan
-    // truncation — without it the logical plan deepens every round and
-    // Catalyst re-analysis makes iteration i cost O(i), turning a
-    // 17-round path graph quadratic (measured 130 s -> 8 s on a 100k-node
-    // path + 120k-edge graph at local[32]).
-    // The per-round convergence checksum RIDES the checkpoint job as an
-    // observed metric (r15): previously every round ran two actions — the
-    // eager checkpoint materialization plus a count+xor aggregate re-read
-    // of the cached blocks — and the fixed cost of that second job
-    // dominates late rounds, whose edge sets are tiny. One action per
-    // round now; the observed values are the same two longs.
-    def checkpointed(df: DataFrame): (DataFrame, (Long, Long)) = {
-      val obs = org.apache.spark.sql.Observation()
-      val cp = df.observe(obs, count(lit(1)).as("n"),
-          coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("sig"))
-        .localCheckpoint(true)
-      (cp, (obs.get("n").asInstanceOf[Long], obs.get("sig").asInstanceOf[Long]))
-    }
+    // form both star steps preserve. Every round's edge set is
+    // localCheckpoint'd EAGERLY — the cache and the plan truncation at once
+    // (without it Catalyst re-analysis makes round i cost O(i): 130 s -> 8 s
+    // on a 100k-node path + 120k-edge graph at local[32]). The checksum and
+    // the edge count ride that job as observed metrics: one action a round.
+    def checkpointed(df: DataFrame, phase: String): (DataFrame, (Long, Long)) =
+      described(spark, phase) {
+        val obs = org.apache.spark.sql.Observation()
+        val cp = df.observe(obs, count(lit(1)).as("n"),
+            coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("sig"))
+          .localCheckpoint(true)
+        val m = Phase.observed(obs, "ConnectedComponents", phase)
+        (cp, (m.getAs[Long]("n"), m.getAs[Long]("sig")))
+      }
 
     var (e, prevSig) = checkpointed(edges
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .filter($"a" =!= $"b" && $"a".isNotNull && $"b".isNotNull)
       .select(greatest($"a", $"b").as("u"), least($"a", $"b").as("v"))
-      .distinct())
+      .distinct(), "cc.orient")
 
-    // Small-graph cutover (r16, guide §1.2 "remove unnecessary shuffles and
-    // passes"): the edge count just rode the checkpoint's observed metric,
-    // so the decision is free. At or below the limit the star rounds are
-    // pure fixed job latency — each round is a checkpoint job with ~4
-    // exchanges over a graph that fits in one broadcast — so the labels are
-    // computed driver-side by union-find over the SAME oriented distinct
-    // edge set (bounded collect, ≤ limit×16 bytes — the size class of a
-    // broadcast build side) and returned as a local relation, which
-    // downstream joins broadcast exactly like the checkpointed frame. The
-    // labels are identical by construction: min node id per component.
-    // Above the limit nothing changes — the distributed rounds below are
-    // the 100 TB path. Adaptive plan choice (AQE's broadcast cutover, made
-    // at the operator level), not caching: every run recomputes from its
-    // input.
-    val limit =
-      if (localEdgeLimit >= 0L) localEdgeLimit
-      else spark.conf.get(LocalEdgeLimitKey, LocalEdgeLimitDefault.toString).toLong
-    if (prevSig._1 <= limit) {
-      val es = e.as[(Long, Long)].collect()
-      e.unpersist()
-      val parent = new java.util.HashMap[Long, Long](es.length * 2)
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x
-        while (c != r) { val nx = parent.get(c); parent.put(c, r); c = nx }
-        r
-      }
-      for ((u, v) <- es) {
-        if (!parent.containsKey(u)) parent.put(u, u)
-        if (!parent.containsKey(v)) parent.put(v, v)
-        val ru = find(u); val rv = find(v)
-        // attach the larger root under the smaller: the root IS the
-        // component minimum, matching the distributed labels exactly
-        if (ru < rv) parent.put(rv, ru)
-        else if (rv < ru) parent.put(ru, rv)
-      }
-      val out = Vector.newBuilder[(Long, Long)]
-      val it = parent.keySet().iterator()
-      while (it.hasNext) { val node = it.next(); out += ((node, find(node))) }
-      return out.result().toDF("node", "component")
-    }
-
+    // The cutover (adaptive plan choice, made at the operator level): once
+    // a round's edge set fits, more star rounds are pure fixed job latency,
+    // so the rest runs as one bounded collect (≤ limit × 16 bytes) and
+    // returns a local relation that downstream joins broadcast.
+    def fits = limit > 0L && prevSig._1 <= limit
     var converged = prevSig._1 == 0L
     var iter = 0
-    while (!converged && iter < maxIter) {
+    while (!fits && !converged && iter < maxIter) {
       iter += 1
-      val (next, sig) = checkpointed(smallStar(largeStar(e)))
+      val (next, sig) = checkpointed(smallStar(largeStar(e)), s"cc.round$iter")
       e.unpersist()
       e = next
       converged = sig == prevSig
       prevSig = sig
     }
+    if (fits) return described(spark, s"cc.local edges=${prevSig._1}")(solveLocally(e))
 
     // At the fixpoint the edge set is a forest of stars (member -> min);
-    // the min(component) re-group is belt-and-braces for a maxIter bailout
-    // on a pathological graph, where edges may not yet form proper stars.
-    // Materialized via localCheckpoint so the iteration working set can be
-    // unpersisted before returning — callers get a self-contained frame,
-    // not a view over cached intermediate edges.
-    val labels = e.select($"u".as("node"), $"v".as("component"))
-      .union(e.select($"v".as("node"), $"v".as("component")))
-      .groupBy($"node").agg(min($"component").as("component"))
-      .localCheckpoint(true)
+    // the min(component) re-group covers a maxIter bailout, where edges may
+    // not yet form proper stars. Checkpointed, so the working set can go.
+    val labels = described(spark, "cc.labels") {
+      e.select($"u".as("node"), $"v".as("component"))
+        .union(e.select($"v".as("node"), $"v".as("component")))
+        .groupBy($"node").agg(min($"component").as("component"))
+        .localCheckpoint(true)
+    }
     e.unpersist()
     labels
+  }
+
+  /** The cutover limit: an explicit non-negative argument, else the session
+    * conf, which must lie in [0, [[LocalEdgeLimitMax]]]. */
+  private def edgeLimit(spark: SparkSession, arg: Long): Long =
+    if (arg >= 0L) arg
+    else {
+      val conf = spark.conf.get(LocalEdgeLimitKey, LocalEdgeLimitDefault.toString).toLong
+      require(conf >= 0L && conf <= LocalEdgeLimitMax,
+        s"$LocalEdgeLimitKey=$conf must be in [0, $LocalEdgeLimitMax]: the local " +
+          "path collects up to that many edges (16 bytes each) to the driver")
+      conf
+    }
+
+  /** Union-find over a (checkpointed, oriented) edge set, collected to the
+    * driver: attaching the larger root under the smaller makes every root
+    * its component's minimum, the same label the distributed rounds give. */
+  private def solveLocally(e: DataFrame): DataFrame = {
+    import e.sparkSession.implicits._
+    val es = e.as[(Long, Long)].collect()
+    e.unpersist()
+    val parent = new java.util.HashMap[Long, Long](es.length * 2)
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x
+      while (c != r) { val nx = parent.get(c); parent.put(c, r); c = nx }
+      r
+    }
+    for ((u, v) <- es) {
+      parent.putIfAbsent(u, u)
+      parent.putIfAbsent(v, v)
+      val ru = find(u); val rv = find(v)
+      if (ru < rv) parent.put(rv, ru) else if (rv < ru) parent.put(ru, rv)
+    }
+    val out = Vector.newBuilder[(Long, Long)]
+    parent.keySet().forEach(node => out += ((node, find(node))))
+    out.result().toDF("node", "component")
   }
 
   /** Large-star: every node links its LARGER neighbors to the minimum of

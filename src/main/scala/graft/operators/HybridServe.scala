@@ -203,20 +203,11 @@ object HybridServe {
     val cellsF = Future(
       PqIndex.encodeCells(embeddings, vecIdCol, vecCol, ivf, pq).localCheckpoint())
     val idx = Await.result(indexF, Duration.Inf)
-    // The census action has completed (indexF awaited), so its observed
-    // metric is already delivered in every supported Spark version; the
-    // bounded wait turns a hypothetical metrics-delivery regression into a
-    // clear error instead of an indefinite hang (ADVICE r15).
-    val n =
-      try Await.result(Future(nObs.get("n").asInstanceOf[Long]),
-        scala.concurrent.duration.Duration(60, "s"))
-      catch { case _: java.util.concurrent.TimeoutException =>
-        throw new IllegalStateException(
-          "buildWith: the corpus-count observation did not deliver within " +
-            "60s of the index census completing — Spark stopped reporting " +
-            "observed metrics on the checkpoint action; count the corpus " +
-            "explicitly or investigate the session's listener bus")
-      }
+    // the census action has completed (indexF awaited), so its observed
+    // corpus count is already delivered; the bounded read turns a delivery
+    // regression into a clear error instead of a hang
+    val n = Phase.observed(nObs, "HybridServe.buildWith", "index census")
+      .getAs[Long]("n")
     Artifacts(idx, n, ivf, pq, Await.result(cellsF, Duration.Inf), cfg)
   }
 
@@ -739,9 +730,9 @@ object HybridServe {
       .write.mode("overwrite").parquet(s"$dir/meta")
     // an empty store's write action still runs, so its observation
     // simply reports 0 toward the verified count
-    def n(o: org.apache.spark.sql.Observation): Long =
-      o.get("n").asInstanceOf[Long]
-    n(idxObs) + n(cellObs)
+    def n(o: org.apache.spark.sql.Observation, store: String): Long =
+      Phase.observed(o, "HybridServe.save", s"$store write").getAs[Long]("n")
+    n(idxObs, "index_store") + n(cellObs, "cells_store")
   }
 
   /** Rehydrate [[Artifacts]] from a [[save]]d directory: the models load

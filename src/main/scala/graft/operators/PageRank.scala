@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Fixed-iteration PageRank over an edge list in EXACT integer arithmetic —
@@ -28,30 +28,26 @@ import org.apache.spark.sql.functions._
   * simplification — ranks then measure relative, not normalized,
   * centrality); ON gives the normalized-mass variant at the cost of one
   * extra node-sized aggregate per round — a 1-row frame broadcast into
-  * the round's own plan (r15), not a separate driver action. Edges are
+  * the round's own plan, not a separate driver action. Edges are
   * deduplicated and self-loops removed, so the graph is simple and
   * unweighted.
   *
-  * `stopDelta` adds convergence-based early stopping: after each round
-  * the max |pr' - pr| over all nodes (one scalar aggregate) is compared
-  * against the threshold (in `scale` units) and iteration stops once the
-  * ranks have settled. `iterations` stays the hard upper bound, so the
-  * default (None) keeps the fixed-iteration contract the q108 oracle
-  * replays.
+  * `stopDelta` adds early stopping: each round's max |pr' - pr| is observed
+  * on the round's own checkpoint job and iteration stops once it is within
+  * the threshold (in `scale` units). `iterations` stays the hard bound, so
+  * the default (None) keeps the fixed-iteration contract q108 replays.
   *
-  * Scale shape (100 TB graphs, billions of nodes):
-  *  - per-iteration state is (node, pr) — node-sized, never edge-sized; no
-  *    driver-side state beyond the node count (one `count()` action).
-  *  - each iteration is two node-keyed hash joins plus one
-  *    partially-aggregated `groupBy(dst)`: a hot destination (a popular
-  *    page with millions of in-links) is absorbed by map-side partial sums,
-  *    never sorted in one task — the same de-skew posture as
-  *    [[ConnectedComponents]]' groupBy minima.
-  *  - every iteration's ranks are localCheckpoint'd EAGERLY and the
-  *    previous iteration unpersisted (CC's lesson: without plan
-  *    truncation, Catalyst re-analysis makes iteration i cost O(i)).
-  *    Edges and out-degrees are checkpointed once up front — they are
-  *    re-read every round from cached blocks, not recomputed lineage.
+  * Scale shape (100 TB graphs, billions of nodes; no driver-side path):
+  *  - state is (node, odeg, pr) — node-sized; odeg = 0 marks a dangling
+  *    node. Set-up is one aggregate over src ∪ dst that also observes N.
+  *  - each round is ONE aggregate: edges joined to the ranks of nodes with
+  *    out-links give a share per edge, each node's own zero-share row
+  *    (carrying odeg and the previous pr) is unioned in, and a partially
+  *    aggregated `groupBy(node)` sums them — a hot destination is absorbed
+  *    map-side, never sorted in one task. The join strategy is AQE's.
+  *  - each round's ranks are localCheckpoint'd EAGERLY (CC's lesson: no
+  *    plan truncation makes round i cost O(i)); its jobs are described
+  *    `pagerank.round<i>/<iterations>`, so an early stop is visible.
   */
 object PageRank {
 
@@ -77,74 +73,62 @@ object PageRank {
     require(scale > 0 && scale <= Long.MaxValue / 200,
       s"PageRank: scale must be in (0, ${Long.MaxValue / 200}], got $scale")
     require(stopDelta.forall(_ >= 0), "PageRank: stopDelta must be >= 0")
+    val spark = edges.sparkSession
+    import Phase.described
 
-    val ed = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(true)
-    // the node count rides the checkpoint job as an observed metric (r15)
-    // instead of a second count() action over the cached blocks
-    val nObs = org.apache.spark.sql.Observation()
-    val nodes = ed.select(col("src").as("node"))
-      .union(ed.select(col("dst").as("node")))
-      .distinct()
-      .observe(nObs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    val n = nObs.get("n").asInstanceOf[Long]
+    val (ed, nodes, n) = described(spark, "pagerank.setup") {
+      val ed = edges
+        .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+        .filter(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
+        .distinct()
+        .localCheckpoint(true)
+      val nObs = Observation()
+      val nodes = ed.select(col("src").as("node"), lit(1L).as("o"))
+        .union(ed.select(col("dst").as("node"), lit(0L).as("o")))
+        .groupBy(col("node")).agg(sum(col("o")).as("odeg"))
+        .observe(nObs, count(lit(1)).as("n"))
+        .localCheckpoint(true)
+      (ed, nodes, Phase.observed(nObs, "PageRank", "pagerank.setup").getAs[Long]("n"))
+    }
     require(n > 0, "PageRank: empty graph")
-    val outdeg = ed.groupBy(col("src")).agg(count(lit(1)).as("odeg"))
-      .localCheckpoint(true)
 
     // Driver-side exact integer constants (Long arithmetic, no parity risk)
     val init = scale / n
     val teleport = ((100L - dampingPct) * scale) / (100L * n)
+    val newPr = lit(teleport) + expr(s"($dampingPct * (m" +
+      (if (redistributeDangling) " + __dang" else "") + ")) div 100")
 
-    // no checkpoint for the initial ranks: it is a constant projection over
-    // the already-checkpointed nodes frame (depth-1 lineage over cached
-    // blocks), so materializing it was a pure extra job (r15)
-    var ranks = nodes.select(col("node"), lit(init).as("pr"))
+    // the initial ranks are a constant projection over the checkpointed
+    // node table: depth-1 lineage over cached blocks, no job of their own
+    var ranks = nodes.withColumn("pr", lit(init))
     var i = 0
     var settled = false
     while (i < iterations && !settled) {
-      val shares = ranks.join(outdeg, ranks("node") === outdeg("src"))
-        .select(col("src"), expr("pr div odeg").as("share"))
-      val inbound = ed.join(shares, Seq("src"))
-        .groupBy(col("dst")).agg(sum(col("share")).as("m"))
-      val base = nodes.join(inbound, nodes("node") === inbound("dst"), "left")
-      // dangling mass: previously a separate per-round driver action; now a
-      // 1-row aggregate broadcast INTO the round's plan (r15), so each
-      // round is exactly one job. The arithmetic is unchanged — `div` is
-      // the same floor division the driver-side Long division performed
-      // (both operands non-negative here).
-      val next = (if (redistributeDangling) {
-        val dangF = ranks.join(outdeg, ranks("node") === outdeg("src"), "left_anti")
-          .agg(coalesce(sum(col("pr")), lit(0L)).as("__dsum"))
-          .select(expr(s"__dsum div ${n}L").as("__dang"))
-        base.crossJoin(broadcast(dangF))
-          .select(col("node"),
-            (lit(teleport) + expr(s"($dampingPct * (coalesce(m, 0L) + __dang)) div 100")).as("pr"))
-      } else {
-        base.select(col("node"),
-          (lit(teleport) + expr(s"($dampingPct * coalesce(m, 0L)) div 100")).as("pr"))
-      }).localCheckpoint(true)
-      settled = stopDelta.exists { eps =>
-        // scalar max-|delta| over node-sized state; both sides are
-        // already-checkpointed block scans, so the join is two cached reads
-        next.select(col("node"), col("pr").as("__npr"))
-          .join(ranks, Seq("node"))
-          .agg(coalesce(max(abs(col("__npr") - col("pr"))), lit(0L)))
-          .head.getLong(0) <= eps
+      i += 1
+      val shares = ed.join(ranks.filter(col("odeg") > 0L), col("src") === col("node"))
+        .select(col("dst").as("node"), lit(0L).as("odeg"),
+          expr("pr div odeg").as("share"), lit(null).cast("long").as("prev"))
+      val own = ranks.select(col("node"), col("odeg"), lit(0L).as("share"), col("pr").as("prev"))
+      val summed = shares.union(own).groupBy(col("node"))
+        .agg(max(col("odeg")).as("odeg"), sum(col("share")).as("m"), max(col("prev")).as("prev"))
+      // dangling mass: a 1-row aggregate broadcast INTO the round's plan;
+      // `div` is the same floor division as the driver-side Long arithmetic
+      val round = if (!redistributeDangling) summed else summed.crossJoin(broadcast(
+        ranks.filter(col("odeg") === 0L).agg(expr(s"coalesce(sum(pr), 0L) div ${n}L").as("__dang"))))
+      val phase = s"pagerank.round$i/$iterations"
+      val obs = Observation()
+      val next = described(spark, phase) {
+        round.select(col("node"), col("odeg"), newPr.as("pr"), col("prev"))
+          .observe(obs, max(abs(col("pr") - col("prev"))).as("delta"))
+          .drop("prev")
+          .localCheckpoint(true)
       }
+      settled = stopDelta.exists(_ >= Phase.observed(obs, "PageRank", phase).getAs[Long]("delta"))
       ranks.unpersist()
       ranks = next
-      i += 1
     }
     ed.unpersist()
-    outdeg.unpersist()
-    // nodes stays cached until ranks' final checkpoint is built from it —
-    // the last `next` above already materialized, so release it now.
     nodes.unpersist()
-    ranks
+    ranks.select(col("node"), col("pr"))
   }
 }

@@ -6,6 +6,11 @@ import org.apache.spark.sql.functions._
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Oriented distinct non-loop edge count: what the cutover compares. */
+  private def oriented(edges: Seq[(Long, Long)]): Long =
+    edges.filter { case (a, b) => a != b }
+      .map { case (a, b) => (math.max(a, b), math.min(a, b)) }.distinct.size.toLong
+
   private def cc(edges: Seq[(Long, Long)], maxIter: Int = 25,
                  localEdgeLimit: Long = -1L): Map[Long, Long] =
     ConnectedComponents.run(edges.toDF("src", "dst"), "src", "dst", maxIter,
@@ -43,6 +48,80 @@ class ConnectedComponentsSpec extends SparkSpec {
       val dist = cc(edges, localEdgeLimit = 0L)
       assert(local == dist, s"trial $trial: local/distributed labels diverge")
     }
+  }
+
+  test("residual cutover: a forest that fits after round 1 finishes on the driver with the same labels") {
+    // near-clique blocks over shuffled ids (the shape near-duplicate pairs
+    // produce): the input is above the limit, the round-1 star forest
+    // (about one edge per non-minimum node) is below it
+    val rnd = new scala.util.Random(20261017L)
+    val ids = rnd.shuffle((0L until 300L).toVector)
+    val edges = ids.grouped(12).toSeq.flatMap { b =>
+      for { i <- b.indices; j <- b.indices if i < j && rnd.nextDouble() < 0.7 }
+        yield (b(i), b(j))
+    }
+    val input = oriented(edges)
+    val limit = input / 2
+    val (residual, tags) = jobTags(cc(edges, localEdgeLimit = limit))
+    assert(tags.head == "cc.orient" && tags.contains("cc.round1"), tags)
+    val local = tags.collect { case t if t.startsWith("cc.local edges=") =>
+      t.stripPrefix("cc.local edges=").toLong }
+    assert(local.distinct.size == 1 && local.head <= limit && limit < input, tags)
+    assert(!tags.contains("cc.labels"), tags)
+    assert(residual == cc(edges, localEdgeLimit = 0L))
+    assert(residual == cc(edges, localEdgeLimit = Long.MaxValue))
+  }
+
+  test("job descriptions name CC's path, and the caller's description is restored") {
+    val path = (1L until 40L).map(i => (i, i + 1))
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      val (_, local) = jobTags(cc(path))
+      assert(local.distinct == Seq("cc.orient", "cc.local edges=39"))
+      // localEdgeLimit = 0 disables the local path: every round runs
+      // distributed; collecting the labels is the caller's own job
+      val (_, dist) = jobTags(cc(path, localEdgeLimit = 0L))
+      val ccTags = dist.filter(_.startsWith("cc."))
+      assert(ccTags.head == "cc.orient" && ccTags.contains("cc.round1") &&
+        ccTags.last == "cc.labels" && !dist.exists(_.startsWith("cc.local")) &&
+        dist.last == "caller", dist)
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+    } finally sc.setJobDescription(null)
+  }
+
+  test("localEdgeLimit conf: 0 disables the local path, above the hard cap is rejected") {
+    val key = ConnectedComponents.LocalEdgeLimitKey
+    val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L))
+    try {
+      spark.conf.set(key, "0")
+      val (got, tags) = jobTags(cc(edges))
+      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
+      assert(!tags.exists(_.startsWith("cc.local")), tags)
+      // even an empty edge set (0 edges <= limit 0) stays distributed: its
+      // labels are a checkpoint, not the local path's local relation (an
+      // empty input runs no jobs, so the tags cannot tell the paths apart)
+      def isLocal(limit: Long) = ConnectedComponents.run(Seq.empty[(Long, Long)]
+        .toDF("src", "dst"), "src", "dst", localEdgeLimit = limit).queryExecution
+        .logical.collectLeaves().forall(_.isInstanceOf[
+          org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      assert(!isLocal(0L) && isLocal(1L))
+      for (bad <- Seq(ConnectedComponents.LocalEdgeLimitMax + 1, -5L)) {
+        spark.conf.set(key, bad.toString)
+        val e = intercept[IllegalArgumentException](cc(edges))
+        assert(e.getMessage.contains(key) && e.getMessage.contains(bad.toString))
+      }
+      spark.conf.set(key, ConnectedComponents.LocalEdgeLimitMax.toString)
+      assert(cc(edges)(8L) == 7L)
+    } finally spark.conf.unset(key)
+  }
+
+  test("a bounded observed-metric read names the operator and phase on timeout") {
+    import scala.concurrent.duration._
+    val never = org.apache.spark.sql.Observation()
+    val e = intercept[IllegalStateException](
+      Phase.observed(never, "ConnectedComponents", "cc.round7", 50.millis))
+    assert(e.getMessage.contains("ConnectedComponents") && e.getMessage.contains("cc.round7"))
   }
 
   test("self-loops, duplicate and reversed edges are harmless") {

@@ -96,6 +96,35 @@ class PageRankSpec extends SparkSpec {
     assert(fixed.nonEmpty && fixed.take(2).distinct.size == 1)
   }
 
+  test("seeded random graph with dangling and in-link-free nodes matches the hand recurrence") {
+    // sources are 0..39 and 50..59, destinations 0..49: 40..49 are
+    // dangling, 50..59 have no in-links; self-loops and duplicates included
+    val rnd = new scala.util.Random(20261017L)
+    val ed = Seq.tabulate(300) { _ =>
+      val u = rnd.nextInt(50)
+      ((if (u >= 40) u + 10 else u).toLong, rnd.nextInt(50).toLong)
+    }
+    val dsts = ed.map(_._2).toSet
+    assert(dsts.exists(_ >= 40L) && ed.exists(_._1 >= 50L) && ed.exists { case (a, b) => a == b })
+    for (dangling <- Seq(false, true); t <- Seq(0, 1, 5)) {
+      val got = PageRank.run(ed.toDF("src", "dst"), "src", "dst", t,
+          redistributeDangling = dangling).as[(Long, Long)].collect().toMap
+      assert(got == handRank(ed.toSet, t, redistributeDangling = dangling),
+        s"redistributeDangling=$dangling iterations=$t")
+    }
+  }
+
+  test("each round's jobs are described; an early stop ends below the bound") {
+    val ed = Seq((1L, 2L), (2L, 1L), (2L, 3L))
+    def rounds(tags: Seq[String]) = tags.filter(_.startsWith("pagerank.round")).distinct
+    val (_, fixed) = jobTags(run(ed, 3))
+    assert(fixed.contains("pagerank.setup"))
+    assert(rounds(fixed) == Seq("pagerank.round1/3", "pagerank.round2/3", "pagerank.round3/3"))
+    val (_, early) = jobTags(PageRank.run(Seq((1L, 2L), (2L, 1L)).toDF("src", "dst"),
+      "src", "dst", 50, stopDelta = Some(0L)).collect())
+    assert(rounds(early).head == "pagerank.round1/50" && rounds(early).size < 50, early)
+  }
+
   test("guards: empty graph, bad damping, bad iteration count fail fast") {
     intercept[IllegalArgumentException](
       PageRank.run(Seq.empty[(Long, Long)].toDF("src", "dst"), "src", "dst", 5))
