@@ -447,13 +447,15 @@ object HybridServe {
   def remove(a: Artifacts, stale: DataFrame, docIdCol: String,
              textCol: String): Artifacts = {
     requireMergeable(a, "remove")
-    // The stale-id set MATERIALIZES once (r16): it is re-read by the roster
-    // probe, the stats group, and every downstream action's anti-join
-    // broadcasts (index + cells), and without the checkpoint each of those
-    // re-executes the caller's stale lineage — in the prune-stale pipeline
-    // shape that lineage is itself a corpus semi-join (q129/q130), re-run
-    // 3-4x per mutation. Checkpointed state is batch-id-sized (the same
-    // bound that justifies broadcasting it); the buildWith/upsert eager-
+    // The stale-id set MATERIALIZES once (r16): the roster probe, the
+    // stats group's id join and every downstream action's anti-join
+    // broadcasts (index + cells) read this checkpoint instead of each
+    // re-executing the caller's stale lineage, which in the prune-stale
+    // pipeline shape is itself a corpus semi-join (q129/q130). The stats
+    // group still runs that lineage once: `staleStats` below needs the
+    // stale rows' text, so it is built from `stale`, not from this
+    // checkpoint. Checkpointed state is batch-id-sized (the same bound
+    // that justifies broadcasting it); the buildWith/upsert eager-
     // materialization pattern applied at the mutation's input.
     val staleIds = stale.select(col(docIdCol).as("__sid")).distinct()
       .localCheckpoint()

@@ -12,7 +12,7 @@ import scala.concurrent.duration._
   * phase's name as its Spark job description, so a `SparkListener` (or the
   * UI) attributes jobs to `cc.round3` or `pagerank.round2/5` without any side
   * channel; and a metric observed on a phase's checkpoint job is read with a
-  * bound, on the calling thread. */
+  * bound, on the calling thread (also `pipeline.Engine`'s step metrics). */
 private[graft] object Phase {
 
   private val DescriptionKey = "spark.job.description"

@@ -69,7 +69,8 @@ object Engine {
       (n, listener.capturedNs.get())
     } finally spark.listenerManager.unregister(listener)
     step.finalizeStep(spark)
-    val metrics = obs.get
+    val row = graft.operators.Phase.observed(obs, "Engine", step.name)
+    val metrics = row.getValuesMap[Any](row.schema.fieldNames.toSeq)
     val report = StepReport(
       step.name, step.name, (System.nanoTime() - t0) / 1e9, rows, metrics,
       actionSeconds = if (actionNs < 0) -1.0 else actionNs / 1e9)

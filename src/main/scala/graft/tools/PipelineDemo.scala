@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.operators.Embedding
 import graft.pipeline.{DropDuplicationStep, UrlFilterStep}
 import graft.sinks.VersionedTableSink
@@ -28,11 +27,7 @@ object PipelineDemo {
       "---\nkeywords: alpha,beta\nurl: https://kb.local/a2\n---\n# Alpha\n\n" +
         (1 to 400).map(i => s"word$i").mkString(" "))
 
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

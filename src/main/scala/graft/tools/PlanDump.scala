@@ -1,26 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: dump each named query's explain("formatted") to
-  * <outDir>/<query>_<tag>.txt (args: outDir tag q1 q2 ...). Bench-shaped
-  * session (local[32], AQE on) so the captured plans match what the bench
-  * executes. */
+  * <outDir>/<query>_<tag>.txt (args: outDir tag q1 q2 ...). Bench's
+  * session (GraftSession, SPARK_GRAFT_CPUS cores) so the captured plans
+  * match what the bench executes. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val tag = args(1)
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(graft.plans.GraftExtensions.install)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     args.drop(2).foreach { name =>

@@ -8,17 +8,9 @@ import scala.jdk.CollectionConverters._
 /** Shared local session for all suites (tests fork one JVM; the session is
   * created once and never stopped mid-run). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    // same extension set as the Bench/Verify sessions, so every suite
-    // exercises the plans the driver actually runs
-    .withExtensions(graft.plans.GraftExtensions.install)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** Bench's session at a fixed 4 cores, so suites see 4 shuffle partitions
+    * on any machine. */
+  lazy val spark: SparkSession = GraftSession.local(4)
 }
 
 trait SparkSpec extends AnyFunSuite {
@@ -29,6 +21,17 @@ trait SparkSpec extends AnyFunSuite {
   }
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** `body` with the session confs `kv` set; afterwards each key gets its
+    * prior value back, or is unset if it had none. */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val prior = kv.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   /** Occurrences of `needle` in a rendered plan string — shared by the
     * plan-shape assertions across suites. */

@@ -10,9 +10,7 @@ class BucketingSpec extends SparkSpec {
   import spark.implicits._
 
   test("joining two tables bucketed on the key runs without a shuffle exchange") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force non-broadcast
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force non-broadcast
       val df = (1 to 1000).map(i => (i.toLong, s"v$i")).toDF("k", "v")
       df.write.mode("overwrite").bucketBy(8, "k").saveAsTable("bkt_a")
       df.write.mode("overwrite").bucketBy(8, "k").saveAsTable("bkt_b")
@@ -26,7 +24,6 @@ class BucketingSpec extends SparkSpec {
         .queryExecution.executedPlan.toString
       assert(shuffled.contains("Exchange hashpartitioning"))
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.sql("DROP TABLE IF EXISTS bkt_a")
       spark.sql("DROP TABLE IF EXISTS bkt_b")
     }

@@ -93,8 +93,7 @@ class ConnectedComponentsSpec extends SparkSpec {
   test("localEdgeLimit conf: 0 disables the local path, above the hard cap is rejected") {
     val key = ConnectedComponents.LocalEdgeLimitKey
     val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L))
-    try {
-      spark.conf.set(key, "0")
+    withConf(key -> "0") {
       val (got, tags) = jobTags(cc(edges))
       assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
       assert(!tags.exists(_.startsWith("cc.local")), tags)
@@ -113,7 +112,7 @@ class ConnectedComponentsSpec extends SparkSpec {
       }
       spark.conf.set(key, ConnectedComponents.LocalEdgeLimitMax.toString)
       assert(cc(edges)(8L) == 7L)
-    } finally spark.conf.unset(key)
+    }
   }
 
   test("a bounded observed-metric read names the operator and phase on timeout") {

@@ -114,10 +114,8 @@ class TrainingPipelineSpec extends SparkSpec {
         case p => p
       }).toString
     }
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     val dir = tmpDir("graft_tp_bkt")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val docs = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
         .select("doc_id", "text")
       val curated = QualityFilter.keep(docs, "text",
@@ -139,7 +137,6 @@ class TrainingPipelineSpec extends SparkSpec {
       // row accounting survives the round-trip through the layout
       assert(rejoined.count() == verdicts.filter(!col("is_duplicate")).count())
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.sql("DROP TABLE IF EXISTS tp_corpus")
       spark.sql("DROP TABLE IF EXISTS tp_verdicts")
     }

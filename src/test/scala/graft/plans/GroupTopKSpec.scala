@@ -41,8 +41,7 @@ class GroupTopKSpec extends SparkSpec {
   test("partial-phase chunked flushing stays exact (memory bound per chunk)") {
     // flush after every 2 distinct groups: a group split across chunks
     // ships up to k rows per chunk, and the final phase re-prunes exactly
-    spark.conf.set("spark.graft.topk.partialFlushGroups", "2")
-    try {
+    withConf("spark.graft.topk.partialFlushGroups" -> "2") {
       val rnd = new scala.util.Random(11)
       val df = (1 to 3000).map(i =>
         (s"g${rnd.nextInt(40)}", i.toLong, rnd.nextInt(30))).toDF("g", "id", "score")
@@ -54,16 +53,15 @@ class GroupTopKSpec extends SparkSpec {
       val expected = df.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
         .drop("rn").orderBy("g", "id").collect().toSeq
       assert(top == expected)
-    } finally spark.conf.unset("spark.graft.topk.partialFlushGroups")
+    }
   }
 
   test("sort-based final phase: group cardinality >> partialFlushGroups stays exact under a small heap budget") {
     // 5000 distinct groups against a partial flush budget of 16: the hash
     // final would hold all 5000 groups' heaps; finalMode=sort streams them
     // behind Spark's external SortExec instead — O(1) operator state
-    spark.conf.set("spark.graft.topk.partialFlushGroups", "16")
-    spark.conf.set("spark.graft.topk.finalMode", "sort")
-    try {
+    withConf("spark.graft.topk.partialFlushGroups" -> "16",
+             "spark.graft.topk.finalMode" -> "sort") {
       val rnd = new scala.util.Random(23)
       val df = (1 to 20000).map(i =>
         (s"g${rnd.nextInt(5000)}", i.toLong, rnd.nextInt(100))).toDF("g", "id", "score")
@@ -78,9 +76,6 @@ class GroupTopKSpec extends SparkSpec {
       val expected = df.withColumn("rn", row_number().over(w)).filter(col("rn") <= 2)
         .drop("rn").orderBy("g", "id").collect().toSeq
       assert(got == expected)
-    } finally {
-      spark.conf.unset("spark.graft.topk.partialFlushGroups")
-      spark.conf.unset("spark.graft.topk.finalMode")
     }
   }
 

@@ -41,6 +41,9 @@ class PlanAuditSpec extends SparkSpec {
     val plan = finalPlan(q("q06_join_star"))
     assert(planCount(plan, "BroadcastHashJoin") >= 3, plan.take(2000))
     assert(!plan.contains("SortMergeJoin"), plan.take(2000))
+    // audited at the broadcast threshold Bench times (GraftSession: 64 MB)
+    assert(org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.autoBroadcastJoinThreshold")) == (64L << 20))
   }
 
   test("q02: aggregation is two-phase (map-side partial + final)") {
@@ -162,15 +165,12 @@ class PlanAuditSpec extends SparkSpec {
     // with broadcast off (the 100 TB condition: neither fact side fits),
     // the bucketed layout must carry the join on scan partitioning alone —
     // the only hash exchange left is the small post-join agg on priority
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val plan = finalPlan(q("q101_bucketed_join"))
       assert(plan.contains("SortMergeJoin"), plan.take(2500))
       assert(!plan.contains("Exchange hashpartitioning(o_orderkey"), plan.take(2500))
       assert(!plan.contains("Exchange hashpartitioning(l_orderkey"), plan.take(2500))
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.sql("DROP TABLE IF EXISTS graft_q101_orders")
       spark.sql("DROP TABLE IF EXISTS graft_q101_lineitem")
     }

@@ -37,10 +37,8 @@ class DataLayoutSpec extends SparkSpec {
   }
 
   test("sorted-bucket join: no Exchange, no Sort, one file per bucket") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     val dir = tmpDir("graft_layout_bkt")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val a = (1 to 20000).map(i => (i.toLong, s"a$i")).toDF("k", "va")
       val b = (1 to 20000).filter(_ % 3 == 0).map(i => (i.toLong, s"b$i")).toDF("k", "vb")
       DataLayout.writeBucketed(a, "layout_bkt_a", s"$dir/a", 8, "k")
@@ -60,18 +58,15 @@ class DataLayoutSpec extends SparkSpec {
 
       // with the bucket-order trust conf on (safe under the writer's
       // one-file-per-bucket invariant), the per-bucket Sorts go too
-      spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      try {
+      withConf("spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") {
         val sorted = finalPlan(join())
         val standaloneSorts = sorted.linesIterator
           .filter(l => l.contains("Sort [") && !l.contains("SortMergeJoin")).toSeq
         assert(standaloneSorts.isEmpty,
           s"bucket sort order not reused:\n${standaloneSorts.mkString("\n")}")
         assert(planCount(sorted, "Exchange hashpartitioning") == 0, sorted.take(1500))
-      } finally
-        spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "false")
+      }
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.sql("DROP TABLE IF EXISTS layout_bkt_a")
       spark.sql("DROP TABLE IF EXISTS layout_bkt_b")
     }
@@ -79,16 +74,14 @@ class DataLayoutSpec extends SparkSpec {
 
   test("point filter on the bucket key prunes to a single bucket at planning time") {
     val dir = tmpDir("graft_layout_prune")
-    try {
+    // the auto-bucketed-scan heuristic only looks at join/agg benefit and
+    // would drop the bucketed scan for a bare lookup — pruning needs it on
+    try withConf("spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
       val a = (1 to 20000).map(i => (i.toLong, s"a$i")).toDF("k", "va")
       DataLayout.writeBucketed(a, "layout_bkt_p", s"$dir/p", 8, "k")
-      // the auto-bucketed-scan heuristic only looks at join/agg benefit and
-      // would drop the bucketed scan for a bare lookup — pruning needs it on
-      spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
       val plan = finalPlan(DataLayout.table(spark, "layout_bkt_p").filter(col("k") === 12345L))
       assert(plan.contains("SelectedBucketsCount: 1 out of 8"), plan.take(1500))
     } finally {
-      spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
       spark.sql("DROP TABLE IF EXISTS layout_bkt_p")
     }
   }
