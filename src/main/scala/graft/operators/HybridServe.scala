@@ -37,7 +37,10 @@ import org.apache.spark.sql.functions._
   *    ([[Rank.rrfFuse]]). graft.tools.ScaleCurve measured this serve
   *    phase FLAT across 100x corpus growth.
   *  - MUTATE ([[ingest]]/[[remove]]/[[upsert]]): index-sized incremental
-  *    maintenance; with [[BuildConfig.champSlack]] > 0 removal is EXACT
+  *    maintenance. Each ingest materializes its merged index and only the
+  *    batch's new cells, so the next serve, remove or save does not re-run
+  *    the merge, and the stored cells stay a lazy (partition-pruned)
+  *    scan. With [[BuildConfig.champSlack]] > 0 removal is EXACT
   *    until a term loses more than `champSlack` stored postings
   *    (cumulatively since the last rebuild), monitored by
   *    [[compactionDue]] and compacted by [[maybeCompact]].
@@ -183,32 +186,31 @@ object HybridServe {
       // a rebuild stores every term's true top-(m+s) prefix: nothing has
       // been discarded below any list boundary yet
       .withColumn("loss", lit(0L))
-    // Both stores MATERIALIZE eagerly (r15 — the upsert localCheckpoint
-    // pattern applied at the source): a built-but-unsaved artifact set is
-    // consumed by several independent actions (a mutation's roster guard +
-    // stats pass + the serve/save itself), and each action would otherwise
-    // re-run the corpus-sized build pipeline from scratch — measured ~2
-    // full census passes per action at r15 start. Checkpointed state is
+    // Both stores MATERIALIZE eagerly (r15, as ingest's end does): a
+    // built-but-unsaved artifact set is consumed by several independent
+    // actions (a mutation's roster guard + stats pass + the serve/save
+    // itself), and each action would otherwise re-run the corpus-sized
+    // build pipeline from scratch — measured ~2 full census passes per
+    // action at r15 start. Checkpointed state is
     // index-/cells-sized (exactly what save would write), never
     // corpus-sized; save over the checkpoint writes from cached blocks
     // instead of re-tokenizing. The two build actions (index census with
     // the observed nDocs riding it, cells encode) are INDEPENDENT jobs
     // over different inputs, so they run concurrently (guide §2.6 — later
     // jobs back-fill the earlier jobs' idle task slots) instead of
-    // serially.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val indexF = Future(requireIndexSchema(index, "buildWith").localCheckpoint())
-    val cellsF = Future(
-      PqIndex.encodeCells(embeddings, vecIdCol, vecCol, ivf, pq).localCheckpoint())
-    val idx = Await.result(indexF, Duration.Inf)
-    // the census action has completed (indexF awaited), so its observed
-    // corpus count is already delivered; the bounded read turns a delivery
-    // regression into a clear error instead of a hang
+    // serially. The checkpoints are artifacts the caller owns.
+    val spark = corpus.sparkSession
+    val (idx, cells) = Phase.concurrently(
+      Phase.described(spark, "serve.build.index")(
+        requireIndexSchema(index, "buildWith").localCheckpoint()))(
+      Phase.described(spark, "serve.build.cells")(
+        PqIndex.encodeCells(embeddings, vecIdCol, vecCol, ivf, pq).localCheckpoint()))
+    // the census action has completed, so its observed corpus count is
+    // already delivered; the bounded read turns a delivery regression into
+    // a clear error instead of a hang
     val n = Phase.observed(nObs, "HybridServe.buildWith", "index census")
       .getAs[Long]("n")
-    Artifacts(idx, n, ivf, pq, Await.result(cellsF, Duration.Inf), cfg)
+    Artifacts(idx, n, ivf, pq, cells, cfg)
   }
 
   /** [[buildWith]] with the models fitted here: IVF centroids via
@@ -217,8 +219,10 @@ object HybridServe {
   def build(corpus: DataFrame, docIdCol: String, textCol: String,
             embeddings: DataFrame, vecIdCol: String, vecCol: String,
             cfg: BuildConfig = BuildConfig()): Artifacts = {
-    val ivf = IvfIndex.fit(embeddings, vecIdCol, vecCol, cfg.ivfK, cfg.iters)
-    val pq = PqIndex.fit(embeddings, vecIdCol, vecCol, cfg.pqM, cfg.pqKsub, cfg.iters)
+    // the two fits read the embeddings independently: overlap them
+    val (ivf, pq) = Phase.concurrently(
+      IvfIndex.fit(embeddings, vecIdCol, vecCol, cfg.ivfK, cfg.iters))(
+      PqIndex.fit(embeddings, vecIdCol, vecCol, cfg.pqM, cfg.pqKsub, cfg.iters))
     buildWith(corpus, docIdCol, textCol, embeddings, vecIdCol, vecCol, ivf, pq, cfg)
   }
 
@@ -275,6 +279,15 @@ object HybridServe {
     * union into the cells frame. Neither the stored corpus text nor the
     * stored embeddings are ever re-read.
     *
+    * The merged index (index-sized) and the batch's new cells
+    * (batch-sized) MATERIALIZE before ingest returns (eager
+    * localCheckpoint, as in [[buildWith]]; the checkpoints are artifacts
+    * the caller owns). So the next serve, [[remove]] guard or [[save]]
+    * reads them instead of re-running the batch's census and encode and
+    * the merge, each of which reads the caller's batch lineage. The
+    * stored cells stay as they came in, so a loaded store keeps its
+    * cell-partition pruning at serve time.
+    *
     * THE SLACK BUDGET DOES NOT REPLENISH ACROSS A MERGE. A term that
     * lost `loss` stored postings to [[remove]] since the last rebuild
     * has discarded postings below its list boundary that a merged list
@@ -301,16 +314,7 @@ object HybridServe {
   def ingest(a: Artifacts, corpus: DataFrame, docIdCol: String, textCol: String,
              embeddings: DataFrame, vecIdCol: String, vecCol: String): Artifacts = {
     requireMergeable(a, "ingest")
-    // ONE guard job doubling as the nDocs count: the batch's ids probe the
-    // full membership roster (index ids UNION cells ids — a text-only doc
-    // has no cells row, and re-ingesting it would silently double-count
-    // its df/cf in the merge, so the cells store alone is not enough).
-    val probe = corpus.select(col(docIdCol).as("__rid"))
-      .join(rosterIds(a, "ingest").withColumn("__hit", lit(1)), Seq("__rid"), "left")
-      .agg(count(lit(1)).as("n"), count(col("__hit")).as("overlap")).head()
-    require(probe.getLong(1) == 0,
-      "ingest: batch contains ids already in the stored serving set — corpora " +
-        "must be disjoint (updating a stored doc is upsert: remove, then ingest)")
+    val spark = a.index.sparkSession
     val batchIndex = Rank.championIndex(corpus, docIdCol, textCol,
         m = a.build.champM + a.build.champSlack, minDf = 1L,
         lowercase = a.build.lowercase)
@@ -321,10 +325,27 @@ object HybridServe {
       requireIndexSchema(a.index, "ingest"),
       requireIndexSchema(batchIndex, "ingest"),
       mTotal = a.build.champM + a.build.champSlack)
-    val newCells = PqIndex.encodeCells(embeddings, vecIdCol, vecCol, a.ivf, a.pq)
-    Artifacts(merged, a.nDocs + probe.getLong(0), a.ivf, a.pq,
-      a.cells.select(col("cid"), col("cell"), col("codes"))
-        .unionByName(newCells.select(col("cid"), col("cell"), col("codes"))),
+    // ONE guard job doubling as the nDocs count: the batch's ids probe the
+    // full membership roster (index ids UNION cells ids — a text-only doc
+    // has no cells row, and re-ingesting it would silently double-count
+    // its df/cf in the merge). It overlaps the merge and the encode; its
+    // require runs on the calling thread, so its failure is rethrown first.
+    val (nNew, (index, newCells)) = Phase.concurrently {
+      val probe = Phase.described(spark, "serve.ingest.guard")(
+        corpus.select(col(docIdCol).as("__rid"))
+          .join(rosterIds(a, "ingest").withColumn("__hit", lit(1)), Seq("__rid"), "left")
+          .agg(count(lit(1)).as("n"), count(col("__hit")).as("overlap")).head())
+      require(probe.getLong(1) == 0,
+        "ingest: batch contains ids already in the stored serving set — corpora " +
+          "must be disjoint (updating a stored doc is upsert: remove, then ingest)")
+      probe.getLong(0)
+    }(Phase.concurrently(
+      Phase.described(spark, "serve.ingest.merge")(merged.localCheckpoint()))(
+      Phase.described(spark, "serve.ingest.merge")(
+        PqIndex.encodeCells(embeddings, vecIdCol, vecCol, a.ivf, a.pq)
+          .select(col("cid"), col("cell"), col("codes")).localCheckpoint())))
+    Artifacts(index, a.nDocs + nNew, a.ivf, a.pq,
+      a.cells.select(col("cid"), col("cell"), col("codes")).unionByName(newCells),
       a.build)
   }
 
@@ -455,35 +476,28 @@ object HybridServe {
     // group still runs that lineage once: `staleStats` below needs the
     // stale rows' text, so it is built from `stale`, not from this
     // checkpoint. Checkpointed state is batch-id-sized (the same bound
-    // that justifies broadcasting it); the buildWith/upsert eager-
+    // that justifies broadcasting it); the buildWith/ingest eager-
     // materialization pattern applied at the mutation's input.
-    val staleIds = stale.select(col(docIdCol).as("__sid")).distinct()
-      .localCheckpoint()
-    // ONE guard job doubling as the nDocs decrement count: every stale id
-    // must be in the stored serving set's roster (index ids UNION cells
-    // ids — a text-only doc has no cells row but is genuinely stored, and
-    // must be removable; the cells anti-join is simply a no-op for it) —
-    // subtracting a never-added doc's stats would silently corrupt df/cf
-    // (the ingest disjointness guard's mirror image), so an unknown id
-    // fails fast.
-    // launched CONCURRENTLY with the grp job below (guide §2.6): the two
-    // guard actions read independent inputs (roster vs stale-vocabulary
-    // stored rows), so running them serially left the cluster idle for a
-    // full bounded-job latency per mutation; the membership require is
-    // still checked FIRST, so error priority is unchanged.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val probeF = Future(staleIds.withColumnRenamed("__sid", "__rid")
-      .join(rosterIds(a, "remove").withColumn("__hit", lit(1)), Seq("__rid"), "left")
-      .agg(count(lit(1)).as("n"), count(col("__hit")).as("known")).head())
+    val stored = requireIndexSchema(a.index, "remove")
+    val spark = stored.sparkSession
+    import spark.implicits._
+    val staleIds = Phase.described(spark, "serve.remove.guard")(
+      stale.select(col(docIdCol).as("__sid")).distinct().localCheckpoint())
     // the stale batch's exact per-term stats, from its own rows alone
     // (championIndex computes df/cf before the champion prune, so m=1
     // minimizes work without affecting the stats)
     val staleStats = Rank.championIndex(stale, docIdCol, textCol,
         m = 1, minDf = 1L, lowercase = a.build.lowercase)
       .select(col("term"), col("df").as("__rdf"), col("cf").as("__rcf"))
-    val stored = requireIndexSchema(a.index, "remove")
+    // ONE guard job doubling as the nDocs decrement count: every stale id
+    // must be in the stored serving set's roster (index ids UNION cells
+    // ids — a text-only doc has no cells row but is genuinely stored, and
+    // must be removable; the cells anti-join is simply a no-op for it) —
+    // subtracting a never-added doc's stats would silently corrupt df/cf
+    // (the ingest disjointness guard's mirror image), so an unknown id
+    // fails fast. The guard overlaps the group job below (guide §2.6; the
+    // two read independent inputs); its require runs on the calling thread,
+    // so its failure is rethrown first.
     // ONE bounded group job over the stale vocabulary's stored rows
     // computes each affected term's pre-removal posting count, its
     // surviving count, and the stats deltas — then the adjustment, loss
@@ -495,9 +509,16 @@ object HybridServe {
     // carries no per-action stats recompute: every downstream action
     // (ingest's guard + merge, save, serve) re-reads the index twice
     // (untouched + touched), never re-runs the stats aggregate.
-    val spark = stored.sparkSession
-    import spark.implicits._
-    val grpF = Future(stored
+    val (nStale, grp) = Phase.concurrently {
+      val probe = Phase.described(spark, "serve.remove.guard")(
+        staleIds.withColumnRenamed("__sid", "__rid")
+          .join(rosterIds(a, "remove").withColumn("__hit", lit(1)), Seq("__rid"), "left")
+          .agg(count(lit(1)).as("n"), count(col("__hit")).as("known")).head())
+      require(probe.getLong(0) == probe.getLong(1),
+        "remove: stale ids not present in the stored serving set — stale rows " +
+          "must come from the previously stored corpus version")
+      probe.getLong(0)
+    }(Phase.described(spark, "serve.remove.stats")(stored
       .join(broadcast(staleStats), Seq("term"))
       .join(broadcast(staleIds), col("id") === col("__sid"), "left")
       .groupBy(col("term"))
@@ -508,12 +529,7 @@ object HybridServe {
         count(when(col("__sid").isNull && col("id").isNotNull, lit(1)))
           .as("surv"))
       .as[(String, Long, Long, Long, Long, Long, Long, Long)]
-      .collect())
-    val probe = Await.result(probeF, Duration.Inf)
-    require(probe.getLong(0) == probe.getLong(1),
-      "remove: stale ids not present in the stored serving set — stale rows " +
-        "must come from the previously stored corpus version")
-    val grp = Await.result(grpF, Duration.Inf)
+      .collect()))
     val adjRows = Vector.newBuilder[(String, Long, Long, Long)]
     val tombRows = Vector.newBuilder[(String, Long, Long, Long)]
     for ((term, df0, cf0, loss0, rdf, rcf, prevHave, surv) <- grp) {
@@ -587,7 +603,7 @@ object HybridServe {
     val cells = a.cells.select(col("cid"), col("cell"), col("codes"))
       .join(broadcast(staleIds), col("cid") === col("__sid"), "left_anti")
     Artifacts(untouched.unionByName(touched).unionByName(tomb),
-      a.nDocs - probe.getLong(0), a.ivf, a.pq, cells, a.build)
+      a.nDocs - nStale, a.ivf, a.pq, cells, a.build)
   }
 
   /** Document update — the reference's create-vs-update upsert
@@ -602,34 +618,15 @@ object HybridServe {
     * `freshEmb` = the incoming batch's embeddings. Exactness is
     * [[remove]]'s + [[ingest]]'s: stats and the vector leg exact,
     * champion lists exact until a term overdraws its champSlack
-    * backfill budget.
-    *
-    * The removed index and cells frames MATERIALIZE (eager
-    * localCheckpoint — the PageRank/ConnectedComponents truncation
-    * pattern) before [[ingest]] consumes them: ingest runs its roster
-    * guard action AND the merge jobs over the removed frames, and
-    * without the checkpoint each action would re-execute remove's
-    * anti-joins, stats aggregate, and promotion window from scratch
-    * (measured at 1.7x the sum of the two legs in round 14's
-    * ScaleCurve). The checkpoint also surfaces remove's corruption
-    * raise at upsert call time instead of at the first downstream
-    * action. Checkpointed state is index-sized (the exact frames a
-    * [[save]] would write). */
+    * backfill budget. What materializes is [[ingest]]'s: the merged index
+    * and the batch's new cells. [[remove]]'s driver-side stats make its
+    * returned frames cheap to re-read, so ingest's guard and merge read
+    * them directly. */
   def upsert(a: Artifacts, stale: DataFrame, fresh: DataFrame,
              docIdCol: String, textCol: String,
-             freshEmb: DataFrame, vecIdCol: String, vecCol: String): Artifacts = {
-    val removed = remove(a, stale, docIdCol, textCol)
-    // the two materializations are independent jobs — run them
-    // concurrently (guide §2.6), same as buildWith's build actions
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val idxF = Future(removed.index.localCheckpoint())
-    val cellsF = Future(removed.cells.localCheckpoint())
-    ingest(removed.copy(index = Await.result(idxF, Duration.Inf),
-        cells = Await.result(cellsF, Duration.Inf)),
+             freshEmb: DataFrame, vecIdCol: String, vecCol: String): Artifacts =
+    ingest(remove(a, stale, docIdCol, textCol),
       fresh, docIdCol, textCol, freshEmb, vecIdCol, vecCol)
-  }
 
   /** Removal-degradation monitor, the compaction trigger [[remove]]'s
     * scaladoc promises: terms whose stored list can no longer serve the
@@ -713,29 +710,33 @@ object HybridServe {
     * The counts are MEASURED DURING THE WRITE JOBS ([[Observation]]
     * metrics riding the write actions) — a read-back count would be a
     * second full scan of each store per save, a real job at 100 TB. */
-  def save(spark: SparkSession, a: Artifacts, dir: String): Long = {
-    import spark.implicits._
-    val idxObs = org.apache.spark.sql.Observation()
-    val cellObs = org.apache.spark.sql.Observation()
-    a.index.observe(idxObs, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$dir/index_store")
-    IvfIndex.save(spark, a.ivf, s"$dir/ivf_store")
-    PqIndex.save(spark, a.pq, s"$dir/pq_store")
-    PqIndex.writeCells(a.cells.observe(cellObs, count(lit(1)).as("n")),
-      s"$dir/cells_store")
-    Seq((a.nDocs, a.build.champM, a.build.champSlack, a.build.champMinDf,
-        a.build.lowercase, a.build.ivfK, a.build.pqM, a.build.pqKsub,
-        a.build.iters))
-      .toDF("n_docs", "champ_m", "champ_slack", "champ_min_df", "lowercase",
-        "ivf_k", "pq_m", "pq_ksub", "iters")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    // an empty store's write action still runs, so its observation
-    // simply reports 0 toward the verified count
-    def n(o: org.apache.spark.sql.Observation, store: String): Long =
-      Phase.observed(o, "HybridServe.save", s"$store write").getAs[Long]("n")
-    n(idxObs, "index_store") + n(cellObs, "cells_store")
-  }
+  def save(spark: SparkSession, a: Artifacts, dir: String): Long =
+    Phase.described(spark, "serve.save") {
+      import spark.implicits._
+      val idxObs = org.apache.spark.sql.Observation()
+      val cellObs = org.apache.spark.sql.Observation()
+      // the cells store (a shuffle by cell, then the write) overlaps the
+      // index store and the three one-row-group stores
+      Phase.concurrently {
+        a.index.observe(idxObs, count(lit(1)).as("n"))
+          .write.mode("overwrite").parquet(s"$dir/index_store")
+        IvfIndex.save(spark, a.ivf, s"$dir/ivf_store")
+        PqIndex.save(spark, a.pq, s"$dir/pq_store")
+        Seq((a.nDocs, a.build.champM, a.build.champSlack, a.build.champMinDf,
+            a.build.lowercase, a.build.ivfK, a.build.pqM, a.build.pqKsub,
+            a.build.iters))
+          .toDF("n_docs", "champ_m", "champ_slack", "champ_min_df", "lowercase",
+            "ivf_k", "pq_m", "pq_ksub", "iters")
+          .coalesce(1)
+          .write.mode("overwrite").parquet(s"$dir/meta")
+      }(PqIndex.writeCells(a.cells.observe(cellObs, count(lit(1)).as("n")),
+        s"$dir/cells_store"))
+      // an empty store's write action still runs, so its observation
+      // simply reports 0 toward the verified count
+      def n(o: org.apache.spark.sql.Observation, store: String): Long =
+        Phase.observed(o, "HybridServe.save", s"$store write").getAs[Long]("n")
+      n(idxObs, "index_store") + n(cellObs, "cells_store")
+    }
 
   /** Rehydrate [[Artifacts]] from a [[save]]d directory: the models load
     * into driver state (bounded collects — centroid and codebook rows),
@@ -755,55 +756,50 @@ object HybridServe {
     * mutation paths refuse it until a rebuild records real provenance.
     * A server restarted from this alone ranks bit-identically to the
     * builder (HybridServeSpec pins it). */
-  def load(spark: SparkSession, dir: String): Artifacts = {
-    import spark.implicits._
-    val meta = spark.read.parquet(s"$dir/meta")
-    val nDocs = meta.select(col("n_docs")).as[Long].head()
-    val metaCols = meta.columns.toSet
-    val build =
-      if (metaCols.contains("champ_m")) {
-        val slack =
-          if (metaCols.contains("champ_slack"))
-            meta.select(col("champ_slack")).as[Int].head()
-          else 0
-        meta.select(col("champ_m"), col("champ_min_df"), col("lowercase"),
-            col("ivf_k"), col("pq_m"), col("pq_ksub"), col("iters"))
-          .as[(Int, Long, Boolean, Int, Int, Int, Int)].head() match {
-            case (m, minDf, lc, ivfK, pqM, pqKsub, iters) =>
-              BuildConfig(m, slack, minDf, lc, ivfK, pqM, pqKsub, iters)
-          }
-      } else
-        // pre-config meta: UNKNOWN provenance, marked with the sentinel so
-        // requireMergeable refuses what it cannot verify (ADVICE r13)
-        BuildConfig(champMinDf = LegacyUnknownMinDf)
-    val rawIndex0 = spark.read.parquet(s"$dir/index_store")
-    // r14-and-earlier stores predate the loss column: nothing had been
-    // discarded beyond what those rounds' semantics already tolerated,
-    // so they load with a fresh (zero) loss ledger
-    val rawIndex =
-      if (rawIndex0.columns.contains("loss")) rawIndex0
-      else rawIndex0.withColumn("loss", lit(0L))
-    val fixed = IndexColumns.toSet - "id"
-    val idCand = rawIndex.columns.filterNot(fixed)
-    require(fixed.subsetOf(rawIndex.columns.toSet) && idCand.length == 1,
-      s"load: index store schema ${rawIndex0.columns.mkString("(", ", ", ")")} " +
-        s"does not match (term, df, cf, rank, <id>, tf[, loss]) — refusing to " +
-        "serve from a store whose columns cannot be identified by name")
-    val rawCells = spark.read.parquet(s"$dir/cells_store")
-    require(rawCells.columns.toSet == Set("cid", "cell", "codes"),
-      s"load: cells store schema ${rawCells.columns.mkString("(", ", ", ")")} " +
-        "does not match the canonical (cid, cell, codes) — refusing to guess " +
-        "which column is which (a positional rebind would silently mislabel " +
-        "candidate ids vs cells). Write through HybridServe/PqIndex.writeCells.")
-    Artifacts(
-      index = requireIndexSchema(
-        rawIndex.withColumnRenamed(idCand.head, "id"), "load"),
-      nDocs = nDocs,
-      ivf = IvfIndex.load(spark, s"$dir/ivf_store"),
-      pq = PqIndex.load(spark, s"$dir/pq_store"),
-      cells = rawCells.select(col("cid"), col("cell"), col("codes")),
-      build = build)
-  }
+  def load(spark: SparkSession, dir: String): Artifacts =
+    Phase.described(spark, "serve.load") {
+      // the meta store is one row: read it with one action, fields by name
+      val meta = spark.read.parquet(s"$dir/meta").head()
+      val metaCols = meta.schema.fieldNames.toSet
+      val build =
+        if (metaCols.contains("champ_m"))
+          BuildConfig(meta.getAs[Int]("champ_m"),
+            if (metaCols.contains("champ_slack")) meta.getAs[Int]("champ_slack") else 0,
+            meta.getAs[Long]("champ_min_df"), meta.getAs[Boolean]("lowercase"),
+            meta.getAs[Int]("ivf_k"), meta.getAs[Int]("pq_m"),
+            meta.getAs[Int]("pq_ksub"), meta.getAs[Int]("iters"))
+        else
+          // pre-config meta: UNKNOWN provenance, marked with the sentinel so
+          // requireMergeable refuses what it cannot verify (ADVICE r13)
+          BuildConfig(champMinDf = LegacyUnknownMinDf)
+      val rawIndex0 = spark.read.parquet(s"$dir/index_store")
+      // r14-and-earlier stores predate the loss column: nothing had been
+      // discarded beyond what those rounds' semantics already tolerated,
+      // so they load with a fresh (zero) loss ledger
+      val rawIndex =
+        if (rawIndex0.columns.contains("loss")) rawIndex0
+        else rawIndex0.withColumn("loss", lit(0L))
+      val fixed = IndexColumns.toSet - "id"
+      val idCand = rawIndex.columns.filterNot(fixed)
+      require(fixed.subsetOf(rawIndex.columns.toSet) && idCand.length == 1,
+        s"load: index store schema ${rawIndex0.columns.mkString("(", ", ", ")")} " +
+          s"does not match (term, df, cf, rank, <id>, tf[, loss]) — refusing to " +
+          "serve from a store whose columns cannot be identified by name")
+      val rawCells = spark.read.parquet(s"$dir/cells_store")
+      require(rawCells.columns.toSet == Set("cid", "cell", "codes"),
+        s"load: cells store schema ${rawCells.columns.mkString("(", ", ", ")")} " +
+          "does not match the canonical (cid, cell, codes) — refusing to guess " +
+          "which column is which (a positional rebind would silently mislabel " +
+          "candidate ids vs cells). Write through HybridServe/PqIndex.writeCells.")
+      Artifacts(
+        index = requireIndexSchema(
+          rawIndex.withColumnRenamed(idCand.head, "id"), "load"),
+        nDocs = meta.getAs[Long]("n_docs"),
+        ivf = IvfIndex.load(spark, s"$dir/ivf_store"),
+        pq = PqIndex.load(spark, s"$dir/pq_store"),
+        cells = rawCells.select(col("cid"), col("cell"), col("codes")),
+        build = build)
+    }
 
   /** [[save]] as a crash-safe versioned collection: the artifact set
     * writes as `<name>_v{N}` under `root`, commits via the

@@ -11,8 +11,10 @@ import scala.concurrent.duration._
   * [[PageRank]], [[HybridServe]]): every job a phase submits carries the
   * phase's name as its Spark job description, so a `SparkListener` (or the
   * UI) attributes jobs to `cc.round3` or `pagerank.round2/5` without any side
-  * channel; and a metric observed on a phase's checkpoint job is read with a
-  * bound, on the calling thread (also `pipeline.Engine`'s step metrics). */
+  * channel; two independent phases overlap on a thread of their own, never
+  * on a shared pool; and a metric observed on a phase's checkpoint job is
+  * read with a bound, on the calling thread (also `pipeline.Engine`'s step
+  * metrics). */
 private[graft] object Phase {
 
   private val DescriptionKey = "spark.job.description"
@@ -29,6 +31,29 @@ private[graft] object Phase {
     val caller = sc.getLocalProperty(DescriptionKey)
     sc.setJobDescription(desc)
     try body finally sc.setLocalProperty(DescriptionKey, caller)
+  }
+
+  /** Runs `a` on the calling thread and `b` on a fresh daemon thread, so
+    * two independent phases overlap, and returns both results once both
+    * are done. The thread copies the caller's Spark local properties when
+    * it starts (job description, scheduler pool), which a pooled thread
+    * would not: its jobs are attributed like the caller's. The thread is
+    * always joined; then `a`'s failure is rethrown if it failed, else
+    * `b`'s, so a check inside `a` keeps priority over `b`'s result. */
+  def concurrently[A, B](a: => A)(b: => B): (A, B) = {
+    var rb: Either[Throwable, B] = null
+    val t = new Thread(() => rb = try Right(b) catch { case e: Throwable => Left(e) },
+      "graft-phase")
+    t.setDaemon(true)
+    t.start()
+    // join() makes the thread's write of rb visible here
+    val ra = try Right(a) catch { case e: Throwable => Left(e) }
+    t.join()
+    (ra, rb) match {
+      case (Right(x), Right(y)) => (x, y)
+      case (Left(e), _) => throw e
+      case (_, Left(e)) => throw e
+    }
   }
 
   /** The metrics `obs` observed, waited for at most `bound` with no extra

@@ -327,6 +327,15 @@ class HybridServeSpec extends SparkSpec {
     }
   }
 
+  /** The upsert batch: doc 2 under its id with new content, and new doc 5. */
+  private def upsertBatch = Seq((2L, "spark batch spark"), (5L, "stream filter"))
+    .toDF("doc_id", "text")
+
+  private def upsertEmbeddings = Seq(
+    (2L, Array(0.8f, 0.3f, 0.1f, 0.2f)),
+    (5L, Array(0.2f, 0.8f, 0.9f, 0.2f))
+  ).toDF("vec_id", "embedding")
+
   test("upsert re-ingests under the SAME id and serves like a from-scratch build of the updated corpus; lifecycle survives save/load") {
     val root = java.nio.file.Files.createTempDirectory("graft_hybrid_upsert").toString
     try {
@@ -341,12 +350,8 @@ class HybridServeSpec extends SparkSpec {
         embeddings, "vec_id", "embedding", ivf, pq)
       // doc 2 changes content (update) and doc 5 arrives (create) — the
       // reference's create-vs-update batch, in one upsert call
-      val fresh = Seq((2L, "spark batch spark"), (5L, "stream filter"))
-        .toDF("doc_id", "text")
-      val freshEmb = Seq(
-        (2L, Array(0.8f, 0.3f, 0.1f, 0.2f)),
-        (5L, Array(0.2f, 0.8f, 0.9f, 0.2f))
-      ).toDF("vec_id", "embedding")
+      val fresh = upsertBatch
+      val freshEmb = upsertEmbeddings
       val up = HybridServe.upsert(full, corpus.filter($"doc_id" === 2),
         fresh, "doc_id", "text", freshEmb, "vec_id", "embedding")
       assert(up.nDocs == 5)
@@ -371,6 +376,73 @@ class HybridServeSpec extends SparkSpec {
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
     }
+  }
+
+  test("upsert on a loaded store returns a materialized index: no exchange and no input-table scan left in it, the stored cells still serve partition-pruned, and serving equals a from-scratch build") {
+    val root = java.nio.file.Files.createTempDirectory("graft_hybrid_upsertplan").toString
+    try {
+      corpus.write.parquet(s"$root/docs_tbl")
+      embeddings.write.parquet(s"$root/emb_tbl")
+      upsertBatch.write.parquet(s"$root/fresh_tbl")
+      upsertEmbeddings.write.parquet(s"$root/fresh_emb_tbl")
+      val docsT = spark.read.parquet(s"$root/docs_tbl")
+      val embT = spark.read.parquet(s"$root/emb_tbl")
+      val (ivf, pq) = tinyModels(embT)
+      HybridServe.save(spark, HybridServe.buildWith(docsT, "doc_id", "text",
+        embT, "vec_id", "embedding", ivf, pq), s"$root/store")
+      val up = HybridServe.upsert(HybridServe.load(spark, s"$root/store"),
+        docsT.filter($"doc_id" === 2), spark.read.parquet(s"$root/fresh_tbl"),
+        "doc_id", "text", spark.read.parquet(s"$root/fresh_emb_tbl"),
+        "vec_id", "embedding")
+      // the merge ran once, inside upsert: the returned index re-runs no
+      // shuffle or broadcast and reads none of the input tables
+      val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      val idxPlan = up.index.queryExecution.executedPlan
+      val exchanges = aqe.collect(idxPlan) {
+        case e: org.apache.spark.sql.execution.exchange.Exchange => e
+      }
+      assert(exchanges.isEmpty, idxPlan.toString)
+      val idxScans = aqe.collect(idxPlan) { case f: FileSourceScanExec => f }
+        .flatMap(_.relation.location.rootPaths.map(_.toString))
+      assert(!idxScans.exists(p => p.contains("_tbl")), idxScans.toString)
+      // the stored cells stay a lazy scan: serving prunes them by cell
+      val fused = HybridServe.serve(up, queryBatch,
+        cfg = HybridServe.ServeConfig(kTopPerLeg = 3, kTop = 3, nprobe = 1))
+      val cellScans = fused.queryExecution.sparkPlan.collect {
+        case f: FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.toString.contains("cells_store")) => f
+      }
+      assert(cellScans.nonEmpty)
+      assert(cellScans.forall(_.partitionFilters.nonEmpty),
+        cellScans.map(_.partitionFilters).toString)
+      val fromScratch = HybridServe.buildWith(
+        corpus.filter($"doc_id" =!= 2).unionByName(upsertBatch), "doc_id", "text",
+        embeddings.filter($"vec_id" =!= 2).unionByName(upsertEmbeddings),
+        "vec_id", "embedding", ivf, pq)
+      val got = slackServeRows(up)
+      assert(got.nonEmpty)
+      assert(got == slackServeRows(fromScratch),
+        s"upsert diverged from from-scratch:\n$got\nvs\n${slackServeRows(fromScratch)}")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    }
+  }
+
+  test("an upsert's jobs are described by lifecycle phase, and the caller's job description comes back") {
+    val (ivf, pq) = tinyModels(embeddings)
+    val full = HybridServe.buildWith(corpus, "doc_id", "text",
+      embeddings, "vec_id", "embedding", ivf, pq)
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      val (_, tags) = jobTags(HybridServe.upsert(full, corpus.filter($"doc_id" === 2),
+        upsertBatch, "doc_id", "text", upsertEmbeddings, "vec_id", "embedding"))
+      val phases = tags.filter(_.startsWith("serve.")).toSet
+      assert(phases == Set("serve.remove.guard", "serve.remove.stats",
+        "serve.ingest.guard", "serve.ingest.merge"), tags.toString)
+      assert(!tags.contains("caller"), tags.toString)
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+    } finally sc.setJobDescription(null)
   }
 
   test("serving a removed set adds no exchange: the stale anti-joins broadcast, and the cells scan keeps its partition filter") {
