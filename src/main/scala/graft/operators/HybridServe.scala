@@ -220,9 +220,12 @@ object HybridServe {
             embeddings: DataFrame, vecIdCol: String, vecCol: String,
             cfg: BuildConfig = BuildConfig()): Artifacts = {
     // the two fits read the embeddings independently: overlap them
+    val spark = corpus.sparkSession
     val (ivf, pq) = Phase.concurrently(
-      IvfIndex.fit(embeddings, vecIdCol, vecCol, cfg.ivfK, cfg.iters))(
-      PqIndex.fit(embeddings, vecIdCol, vecCol, cfg.pqM, cfg.pqKsub, cfg.iters))
+      Phase.described(spark, "serve.build.ivf")(
+        IvfIndex.fit(embeddings, vecIdCol, vecCol, cfg.ivfK, cfg.iters)))(
+      Phase.described(spark, "serve.build.pq")(
+        PqIndex.fit(embeddings, vecIdCol, vecCol, cfg.pqM, cfg.pqKsub, cfg.iters)))
     buildWith(corpus, docIdCol, textCol, embeddings, vecIdCol, vecCol, ivf, pq, cfg)
   }
 

@@ -37,6 +37,10 @@ import org.apache.spark.sql.functions._
   */
 object Rank {
 
+  /** [[championIndex]]'s columns, positionally; the impact index adds two. */
+  private val TfIndexCols = Seq("term", "df", "cf", "rank", "id", "tf")
+  private val ImpactIndexCols = TfIndexCols ++ Seq("dl", "impact_micro")
+
   /** One tight-loop pass per doc: (token_count, tf over `terms` only).
     * Token semantics match the oracle's `string_split_regex(text, '\s+')`
     * (leading whitespace yields an empty first token on both engines). */
@@ -59,6 +63,38 @@ object Rank {
     })
   }
 
+  /** Each query's distinct terms, case-folded like the text. */
+  private def queryTerms(queries: Map[String, Seq[String]], lowercase: Boolean,
+                         op: String): Map[String, Seq[String]] = {
+    require(queries.nonEmpty, s"$op: need at least one query")
+    queries.map { case (q, ts) =>
+      val n = ts.map(t => if (lowercase) t.toLowerCase else t).distinct
+      require(n.nonEmpty, s"$op: query '$q' has no terms")
+      q -> n
+    }
+  }
+
+  /** BM25 length normalization (1-b) + b*dl/avgdl. */
+  private def lengthNorm(dl: Column, b: Double, avgdl: Double): Column =
+    lit(1 - b) + lit(b) * dl.cast("double") / lit(avgdl)
+
+  /** One term's BM25 contribution floor(idf * tf(k1+1) / (tf + k1*norm))
+    * as a long. The double arithmetic is left-associated exactly as the
+    * q102/q111/q112/q113 oracles write it, so both engines floor the same
+    * value. */
+  private def contribution(idf: Column, tf: Column, k1: Double, norm: Column): Column =
+    floor(idf * ((tf * lit(k1 + 1)) / (tf + lit(k1) * norm))).cast("long")
+
+  /** The one ranked top-k tail: GroupTopKExec's map-side heaps prune each
+    * `group` to k rows before the only exchange (REPOSE-style pruning under
+    * a global bound), then `rank` numbers those ≤ k rows 1..k by `order`,
+    * which must be total within a group. */
+  private def rankedTopK(df: DataFrame, group: String, order: Seq[Column],
+                         k: Int): DataFrame =
+    graft.plans.GroupTopK.topK(df, Seq(group), order, k)
+      .withColumn("rank", row_number().over(Window.partitionBy(col(group)).orderBy(order: _*)))
+      .filter(col("rank") <= k)
+
   /** BM25 scores of every doc against every query: (query_id, idCol,
     * score_micro), docs with no matching term (or a zero-micro score)
     * dropped. `queries` maps query id -> term list. */
@@ -66,13 +102,7 @@ object Rank {
                  queries: Map[String, Seq[String]],
                  k1: Double = 1.2, b: Double = 0.75,
                  lowercase: Boolean = true): DataFrame = {
-    require(queries.nonEmpty, "bm25Scores: need at least one query")
-    val norm: String => String = t => if (lowercase) t.toLowerCase else t
-    val qTerms = queries.map { case (q, ts) =>
-      val n = ts.map(norm).distinct
-      require(n.nonEmpty, s"bm25Scores: query '$q' has no terms")
-      q -> n
-    }
+    val qTerms = queryTerms(queries, lowercase, "bm25Scores")
     val allTerms = qTerms.values.flatten.toSeq.distinct.sorted
     val f = tfUdf(allTerms, lowercase)
     def proj = docs
@@ -94,21 +124,14 @@ object Rank {
       t -> math.floor(1e6 * math.log(1.0 + (n - dft + 0.5) / (dft + 0.5))).toLong
     }.toMap
 
-    // Pass 2: map-side scoring against driver-embedded idf literals. The
-    // arithmetic shape is mirrored token-for-token by the q102 oracle (all
-    // doubles, left-associated) so both engines floor the same value.
-    def contribution(t: String): Column = {
-      val tf = col("__tf").getItem(t).cast("double")
+    // Pass 2: map-side scoring against driver-embedded idf literals
+    val norm = lengthNorm(col("__dl"), b, avgdl)
+    def termScore(t: String): Column =
       when(col("__tf").getItem(t).isNotNull,
-        floor(lit(idf(t)).cast("double") *
-          ((tf * lit(k1 + 1)) /
-            (tf + lit(k1) * (lit(1 - b) + lit(b) * col("__dl").cast("double") / lit(avgdl)))))
-          .cast("long"))
+        contribution(lit(idf(t)).cast("double"), col("__tf").getItem(t).cast("double"), k1, norm))
         .otherwise(lit(0L))
-    }
     val perQuery = qTerms.keys.toSeq.sorted.map { q =>
-      struct(lit(q).as("query_id"),
-        qTerms(q).map(contribution).reduce(_ + _).as("score_micro"))
+      struct(lit(q).as("query_id"), qTerms(q).map(termScore).reduce(_ + _).as("score_micro"))
     }
     proj.select(col(idCol), explode(array(perQuery: _*)).as("__q"))
       .select(col("__q.query_id").as("query_id"), col(idCol),
@@ -116,22 +139,26 @@ object Rank {
       .filter(col("score_micro") > 0)
   }
 
+  /** Top-k docs per query by BM25: (query_id, idCol, score_micro, rank),
+    * rank 1..kTop by (score desc, id asc). */
+  def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
+               queries: Map[String, Seq[String]], kTop: Int,
+               k1: Double = 1.2, b: Double = 0.75,
+               lowercase: Boolean = true): DataFrame = {
+    require(kTop > 0, "bm25TopK: kTop must be positive")
+    rankedTopK(bm25Scores(docs, idCol, textCol, queries, k1, b, lowercase),
+      "query_id", Seq(col("score_micro").desc, col(idCol).asc), kTop)
+  }
+
   /** Reciprocal-rank fusion (Cormack, Clarke & Buettcher, SIGIR 2009) of
-    * several per-query rankings into one — the standard hybrid-retrieval
-    * combiner for the engine's lexical ([[bm25TopK]]) and vector
-    * ([[Similarity]]/[[IvfIndex]]/[[PqIndex]] `topK`) stacks, which score
-    * on incomparable scales but rank comparably. Each input frame must
-    * have columns (query_id, doc_id, rank).
+    * several per-query rankings into one — the hybrid-retrieval combiner
+    * for the lexical and vector stacks, which score on incomparable scales
+    * but rank comparably. Each input frame has (query_id, doc_id, rank);
+    * each source adds floor(1e6 / (kRrf + rank)) micro-units, summed per
+    * (query_id, doc_id) and ranked with ties broken on doc_id.
     *
-    * Per-source contribution is floor(1e6 / (kRrf + rank)) — the RRF term
-    * in integer micro-units (the [[LmScore]] floor convention) so fused
-    * sums are exact in any partition or source order. Fusion is a hash agg
-    * on (query_id, doc_id) over k·|sources| rows per query — input-sized,
-    * tiny by construction since every input is already a top-k — followed
-    * by GroupTopKExec's bounded prune; ties break on doc_id.
-    *
-    * @return (query_id, doc_id, rank, rrf_micro, n_sources) — n_sources
-    *         is how many input rankings contained the doc. */
+    * @return (query_id, doc_id, rrf_micro, n_sources, rank) — n_sources is
+    *         how many input rankings contained the doc. */
   def rrfFuse(rankings: Seq[DataFrame], kRrf: Int = 60, kTop: Int = 10): DataFrame = {
     require(rankings.nonEmpty, "rrfFuse: need at least one ranking")
     require(kRrf > 0 && kTop > 0, "rrfFuse: kRrf and kTop must be positive")
@@ -141,36 +168,40 @@ object Rank {
     val fused = contribs.reduce(_ unionByName _)
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("__c")).as("rrf_micro"), count(lit(1)).as("n_sources"))
-    val pruned = graft.plans.GroupTopK.topK(
-      fused, Seq("query_id"), Seq(col("rrf_micro").desc, col("doc_id").asc), kTop)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rrf_micro").desc, col("doc_id").asc)
-    pruned.withColumn("rank", row_number().over(w)).filter(col("rank") <= kTop)
+    rankedTopK(fused, "query_id", Seq(col("rrf_micro").desc, col("doc_id").asc), kTop)
+  }
+
+  /** Both builders' one fused pass over a (term, idCol, tf, ...) census:
+    * df/cf partial sums and the m-bounded champion heap
+    * ([[graft.plans.ChampionAgg]]) ride a single partially-aggregated
+    * groupBy(term), so a stopword's full posting list is never
+    * materialized. The heap drains in (ord desc, id asc) order, so rank is
+    * the drain position; `posting` projects the drained struct `__p`
+    * (`id`, `ord`, payload `p0`, `p1`, ...) after the id column. */
+  private def championLists(census: DataFrame, idCol: String, ord: Column,
+                            payload: Seq[Column], m: Int, minDf: Long,
+                            posting: Seq[Column]): DataFrame = {
+    val bridge = org.apache.spark.sql.classic.GraftPlanBridge
+    val heap = graft.plans.ChampionAgg(bridge.staticExpr(col("tf")), bridge.staticExpr(ord),
+      bridge.staticExpr(col(idCol)), payload.map(bridge.staticExpr), m)
+    census.groupBy(col("term"))
+      .agg(bridge.column(heap.toAggregateExpression()).as("__ch"))
+      .filter(col("__ch.df") >= minDf)
+      .select(col("term"), col("__ch.df").as("df"), col("__ch.cf").as("cf"),
+        posexplode(col("__ch.posts")).as(Seq("__pos", "__p")))
+      .select(Seq(col("term"), col("df"), col("cf"),
+        (col("__pos") + 1).cast("int").as("rank"), col("__p.id").as(idCol)) ++ posting: _*)
   }
 
   /** Champion-list inverted index (impact-ordered posting prefixes —
     * Manning/Raghavan/Schütze, *Introduction to Information Retrieval*
-    * §7.1.3): the SERVING-side complement of [[bm25TopK]]'s probe-side
-    * scoring. Per term it emits document frequency, collection frequency,
-    * and the top-`m` postings by term frequency — the "champions" a query
-    * server scores first for early termination. [[bm25TopK]] answers "score
-    * these few probe queries against the whole corpus"; this builds the
-    * persistable index that answers arbitrary future queries without
-    * re-scanning text.
-    *
-    * Scale shape (100 TB):
-    *  - ONE kernel pass per doc emits the per-doc tf map
-    *    ([[graft.functions.Kernels.termFreq]]) so within-doc repetition
-    *    collapses before any exchange; the explode produces the (term, id,
-    *    tf) census directly — no groupBy over raw tokens.
-    *  - per-term df/cf is one partially-aggregated `groupBy(term)`; a
-    *    stopword key is absorbed map-side before the exchange.
-    *  - champion selection rides GroupTopKExec's bounded per-term heaps: a
-    *    stopword's full posting list (potentially corpus-sized at 100 TB)
-    *    is never materialized or sorted — map-side heaps prune to m rows
-    *    per term before the shuffle.
-    *  - `minDf` prunes the hapax long tail (at web scale, MOST of the
-    *    vocabulary) via the stats join, bounding the index size.
+    * §7.1.3): per term, document frequency, collection frequency and the
+    * top-`m` postings by term frequency — the persistable index
+    * [[bm25FromIndex]] serves arbitrary queries from without re-scanning
+    * text. One kernel pass per doc emits its tf map
+    * ([[graft.functions.Kernels.termFreq]]), whose explode is the census;
+    * [[championLists]] does the rest in one exchange. `minDf` prunes the
+    * hapax long tail.
     *
     * @return (term, df, cf, rank, idCol, tf), rank 1..m by (tf desc, id
     *         asc) — ties broken on id so the index is deterministic. */
@@ -179,95 +210,46 @@ object Rank {
                     lowercase: Boolean = true): DataFrame = {
     require(m > 0, "championIndex: m must be positive")
     require(minDf >= 1, "championIndex: minDf must be >= 1")
-    val tf = docs
+    val census = docs
       .select(col(idCol), explode(graft.functions.Kernels.termFreqUdf(lowercase)(
         col(textCol).cast("string"))).as(Seq("term", "tf")))
       .select(col("term"), col(idCol), col("tf").cast("long").as("tf"))
-    // ONE fused pass (r15, guide §2.3/§2.4): df/cf partial sums and the
-    // k-bounded champion heap ride a single partially-aggregated
-    // groupBy(term) — previously stats and GroupTopK were two subtrees,
-    // each tokenizing the corpus and shuffling separately, joined and
-    // rank-windowed after (2 census passes + 3 exchanges + join + window
-    // -> 1 census pass + 1 exchange). Output is bit-identical: the heap
-    // drains in the exact (tf DESC, id ASC) order the window ranked.
-    val ch = tf.groupBy(col("term"))
-      .agg(championAggCol(col("tf"), col("tf"), col(idCol), Nil, m).as("__ch"))
-    ch.filter(col("__ch.df") >= minDf)
-      .select(col("term"), col("__ch.df").as("df"), col("__ch.cf").as("cf"),
-        posexplode(col("__ch.posts")).as(Seq("__pos", "__p")))
-      .select(col("term"), col("df"), col("cf"),
-        (col("__pos") + 1).cast("int").as("rank"),
-        col("__p.id").as(idCol), col("__p.ord").as("tf"))
-  }
-
-  /** Column wrapper over the fused [[graft.plans.ChampionAgg]] (df, cf,
-    * top-k postings in one aggregate). */
-  private def championAggCol(cf: Column, ord: Column, id: Column,
-                             payload: Seq[Column], k: Int): Column = {
-    val bridge = org.apache.spark.sql.classic.GraftPlanBridge
-    bridge.column(graft.plans.ChampionAgg(
-      bridge.staticExpr(cf), bridge.staticExpr(ord), bridge.staticExpr(id),
-      payload.map(bridge.staticExpr), k).toAggregateExpression())
+    championLists(census, idCol, col("tf"), Nil, m, minDf, Seq(col("__p.ord").as("tf")))
   }
 
   /** The (doc count, total token count) 1-row frame behind
-    * [[championIndexImpact]]'s computed-avgdl path — a pure NATIVE plan:
-    * `dl` is `size(split(text, "\s+", 0))`, codegen'd end-to-end with no
-    * kernel UDF and no tf-map allocation, so the stats action costs a bare
-    * column scan rather than a second tokenize pass. The `limit = -1`
-    * split KEEPS trailing empty tokens, exactly like the kernel's
-    * `Pattern.split(text, -1)` ([[graft.functions.Kernels.tokenize]]) and
-    * the oracles' `string_split_regex` — a `limit = 0` split would drop
-    * them and under-count docs with trailing whitespace; null text counts
-    * as dl 0, matching [[graft.functions.Kernels.termFreqDl]]'s null
-    * contract. Package-visible so the spec can assert the no-UDF plan
-    * shape and the kernel dl parity. */
+    * [[championIndexImpact]]'s computed-avgdl path — a NATIVE codegen'd
+    * column scan, no kernel UDF and no second tokenize pass: `dl` is
+    * `size(split(text, "\s+", -1))`. The `limit = -1` split keeps trailing
+    * empty tokens exactly like the kernel's `Pattern.split(text, -1)`
+    * ([[graft.functions.Kernels.tokenize]]) and the oracles'
+    * `string_split_regex`; null text counts as dl 0, as in
+    * [[graft.functions.Kernels.termFreqDl]]. Package-visible so the spec
+    * can assert the no-UDF plan and the kernel dl parity. */
   private[graft] def avgdlStats(docs: DataFrame, textCol: String): DataFrame =
     docs.select(when(col(textCol).isNull, lit(0))
         .otherwise(size(split(col(textCol).cast("string"), "\\s+", -1))).as("__dl"))
       .agg(count(lit(1)), sum(col("__dl").cast("long")))
 
   /** Impact-ordered champion lists — IIR §7.1.3's refinement of
-    * [[championIndex]]: postings are ranked by the BM25 per-(term, doc)
-    * impact w(d,t) rather than raw tf, so a short focused doc outranks a
-    * long one with the same term count. The stored ordering key is the
-    * LENGTH-NORMALIZED tf impact in integer micro units
+    * [[championIndex]]: postings are ranked by the length-normalized tf
+    * impact
     *
     *   impact_micro = floor(1e6 * tf(k1+1) / (tf + k1((1-b) + b*dl/avgdl)))
     *
-    * — idf is deliberately excluded: it is CONSTANT within a term's
-    * posting list, so it cannot change which docs are champions or their
-    * order, and excluding it keeps the key independent of corpus-wide df
-    * (serving multiplies by idf, as [[bm25FromIndex]] does). `dl` comes
-    * from the same single kernel pass as the tf map
-    * ([[graft.functions.Kernels.termFreqDl]]); `avgdl` is one 1-row
-    * driver aggregate (the [[bm25Scores]] stats convention) — or
-    * `fixedAvgdl`, which pins the normalization so INCREMENTAL builds
-    * stay mergeable: with a shared avgdl, impact is a pure per-(term,
-    * doc) value, the top-m subset property holds, and
-    * [[mergeChampionIndexesImpact]] is exact. Scale shape is identical
-    * to [[championIndex]] (map-side census, GroupTopK bounded heaps,
-    * stats join after the prune); the computed-avgdl action is a NATIVE
-    * no-UDF column scan ([[avgdlStats]]) — the kernel tokenizer runs
-    * only inside the census.
+    * so a short focused doc outranks a long one with the same term count.
+    * idf is left out: it is constant within a term's list, so it cannot
+    * change which docs are champions (serving multiplies it in). `dl`
+    * rides the census kernel pass ([[graft.functions.Kernels.termFreqDl]]);
+    * `avgdl` is one native [[avgdlStats]] scan, or `fixedAvgdl`.
     *
-    * AVGDL DRIFT POLICY (the operational question a long-lived
-    * incremental deployment hits first): the pinned `fixedAvgdl` is part
-    * of the index's METADATA contract, not an approximation — carrying
-    * it forward keeps every property exact (merged == from-scratch under
-    * the same pin, RankSpec; serving replays exact BM25 *at that pin*,
-    * q113/q116). What drifts is the MODEL: as the true corpus average
-    * length moves away from the pin, the b-normalization no longer
-    * matches the corpus BM25 a fresh build would compute, and champion
-    * SELECTION is ordered by stale impacts (RankSpec pins a concrete
-    * divergence case). So the policy is: monitor
-    * |avgdl_true - avgdl_pinned| / avgdl_pinned with [[avgdlStats]] (one
-    * cheap column scan, no tokenize); CARRY while it is small (exactness
-    * is per-pin, nothing corrupts); REBUILD the index — and re-pin — when
-    * it crosses the deployment's tolerance (the classic trigger is
-    * ~10-20%, where length-normalization error starts reordering
-    * champions in practice). A rebuild is the same one-pass build, and
-    * serving needs no code change — it reads the new pin from metadata.
+    * Pinning `fixedAvgdl` keeps INCREMENTAL builds mergeable: impact is then
+    * a pure per-(term, doc) value and [[mergeChampionIndexesImpact]] is
+    * exact. The pin is index metadata, not an approximation; what drifts
+    * is the model. Monitor |avgdl_true - avgdl_pinned| / avgdl_pinned with
+    * [[avgdlStats]], carry the pin while it is small, and rebuild (re-pin)
+    * past the deployment's tolerance — ~10-20% is the classic trigger, where
+    * stale impacts start reordering champions (RankSpec pins such a case).
     *
     * @return (term, df, cf, rank, idCol, tf, dl, impact_micro), rank 1..m
     *         by (impact desc, id asc). */
@@ -289,144 +271,127 @@ object Rank {
       require(st.getLong(0) > 0, "championIndexImpact: empty corpus")
       st.getLong(1).toDouble / st.getLong(0).toDouble
     }
-    // map-side, codegen-able; mirrored token-for-token by the q112 oracle
-    val impact = floor(lit(1e6) *
-      ((col("tf").cast("double") * lit(k1 + 1)) /
-        (col("tf").cast("double") + lit(k1) *
-          (lit(1 - b) + lit(b) * col("dl").cast("double") / lit(avgdl))))).cast("long")
-    val scored = census.withColumn("impact_micro", impact)
-    // same one-pass fusion as [[championIndex]] (r15): the impact ordering
-    // key replaces tf in the heap, (tf, dl) ride as posting payload
-    val ch = scored.groupBy(col("term"))
-      .agg(championAggCol(col("tf"), col("impact_micro"), col(idCol),
-        Seq(col("tf"), col("dl")), m).as("__ch"))
-    ch.filter(col("__ch.df") >= minDf)
-      .select(col("term"), col("__ch.df").as("df"), col("__ch.cf").as("cf"),
-        posexplode(col("__ch.posts")).as(Seq("__pos", "__p")))
-      .select(col("term"), col("df"), col("cf"),
-        (col("__pos") + 1).cast("int").as("rank"),
-        col("__p.id").as(idCol), col("__p.p0").as("tf"), col("__p.p1").as("dl"),
-        col("__p.ord").as("impact_micro"))
-  }
-
-  /** Exact merge of two [[championIndexImpact]] indexes over DISJOINT
-    * corpora — [[mergeChampionIndexes]] for the impact-ordered variant.
-    * Exactness requires both halves built with the SAME `fixedAvgdl`
-    * (impact is then a pure per-(term, doc) value, so a union top-m
-    * posting is top-m within its half); build halves with `minDf = 1`
-    * and apply `minDf` here, as in the tf merge. */
-  def mergeChampionIndexesImpact(a: DataFrame, b: DataFrame, m: Int,
-                                 minDf: Long = 1L,
-                                 validateDisjoint: Boolean = false): DataFrame = {
-    require(m > 0, "mergeChampionIndexesImpact: m must be positive")
-    require(minDf >= 1, "mergeChampionIndexesImpact: minDf must be >= 1")
-    val cols = Seq("term", "df", "cf", "rank", "id", "tf", "dl", "impact_micro")
-    if (validateDisjoint) {
-      val overlap = a.toDF(cols: _*).select(col("id")).distinct()
-        .join(b.toDF(cols: _*).select(col("id")).distinct(), Seq("id"), "left_semi")
-        .limit(1).count()
-      require(overlap == 0,
-        "mergeChampionIndexesImpact: halves share document ids — corpora must be disjoint")
-    }
-    val u = a.toDF(cols: _*).withColumn("__half", lit(0))
-      .unionByName(b.toDF(cols: _*).withColumn("__half", lit(1)))
-    val stats = u.select(col("__half"), col("term"), col("df"), col("cf")).distinct()
-      .groupBy(col("term"))
-      .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
-      .filter(col("df") >= minDf)
-    val champs = graft.plans.GroupTopK.topK(
-      u.select(col("term"), col("id"), col("tf"), col("dl"), col("impact_micro")),
-      Seq("term"), Seq(col("impact_micro").desc, col("id").asc), m)
-    val w = Window.partitionBy(col("term"))
-      .orderBy(col("impact_micro").desc, col("id").asc)
-    champs.join(stats, Seq("term"))
-      .withColumn("rank", row_number().over(w))
-      .select(col("term"), col("df"), col("cf"), col("rank"), col("id"),
-        col("tf"), col("dl"), col("impact_micro"))
+    val impact = contribution(lit(1e6), col("tf").cast("double"), k1,
+      lengthNorm(col("dl"), b, avgdl))
+    championLists(census.withColumn("impact_micro", impact), idCol,
+      col("impact_micro"), Seq(col("tf"), col("dl")), m, minDf,
+      Seq(col("__p.p0").as("tf"), col("__p.p1").as("dl"), col("__p.ord").as("impact_micro")))
   }
 
   /** Merge two champion indexes built over DISJOINT corpora — the
     * incremental-maintenance path (the [[Dedup.minhashIndex]] pattern for
     * the lexical side): index the arriving batch alone, merge with the
-    * stored index, never re-scan corpus text. Exact, not approximate:
-    * a global top-m posting is necessarily top-m within its own half, so
-    * top-m(A ∪ B) == top-m(top-m(A) ∪ top-m(B)) and the merged index is
-    * bit-identical to a from-scratch build over the union (the q109
-    * oracle IS q106's from-scratch formulation). df/cf add because the
-    * corpora are disjoint.
+    * stored index, never re-scan corpus text. Exact: a global top-m
+    * posting is top-m within its own half, so top-m(A ∪ B) ==
+    * top-m(top-m(A) ∪ top-m(B)), and df/cf add because the corpora are
+    * disjoint — the merge is bit-identical to a from-scratch build (the
+    * q109 oracle is q106's formulation).
     *
-    * Build the halves with `minDf = 1` and apply `minDf` HERE: a term
-    * below the threshold in each half can cross it in the union, so
-    * pruning at build time would break mergeability (same reason
-    * [[Dedup.minhashIndex]] stores uncapped band rows).
-    *
-    * Scale shape: input is two bounded indexes (≤ m postings per term),
-    * never the corpora; one partial-aggregated stats groupBy plus a
-    * GroupTopK re-prune over ≤ 2m rows per term.
-    *
-    * Pass `validateDisjoint = true` to fail fast (bounded limit-1 probe)
-    * when the halves share document ids — an overlap would otherwise
-    * silently double-count df/cf rather than error. */
+    * Build the halves with `minDf = 1` and apply `minDf` HERE: a term below
+    * the threshold in each half can cross it in the union.
+    * `validateDisjoint = true` fails fast (a bounded limit-1 probe) when the
+    * halves share document ids, which would otherwise double-count df/cf. */
   def mergeChampionIndexes(a: DataFrame, b: DataFrame, m: Int,
                            minDf: Long = 1L,
-                           validateDisjoint: Boolean = false): DataFrame = {
-    require(m > 0, "mergeChampionIndexes: m must be positive")
-    require(minDf >= 1, "mergeChampionIndexes: minDf must be >= 1")
-    val cols = Seq("term", "df", "cf", "rank", "id", "tf")
+                           validateDisjoint: Boolean = false): DataFrame =
+    mergeChampions("mergeChampionIndexes", TfIndexCols, "tf", a, b, m, minDf,
+      validateDisjoint)
+
+  /** [[mergeChampionIndexes]] for two [[championIndexImpact]] indexes,
+    * ordered by impact. Exact only when both halves share one
+    * `fixedAvgdl`. */
+  def mergeChampionIndexesImpact(a: DataFrame, b: DataFrame, m: Int,
+                                 minDf: Long = 1L,
+                                 validateDisjoint: Boolean = false): DataFrame =
+    mergeChampions("mergeChampionIndexesImpact", ImpactIndexCols, "impact_micro",
+      a, b, m, minDf, validateDisjoint)
+
+  /** The one merge body: summed per-term stats joined to the re-pruned
+    * union of both halves' postings (≤ 2m rows per term). */
+  private def mergeChampions(op: String, cols: Seq[String], ord: String,
+                             a: DataFrame, b: DataFrame, m: Int, minDf: Long,
+                             validateDisjoint: Boolean): DataFrame = {
+    require(m > 0, s"$op: m must be positive")
+    require(minDf >= 1, s"$op: minDf must be >= 1")
+    // positional rename: the builders keep the caller's id column name
+    val (ha, hb) = (a.toDF(cols: _*), b.toDF(cols: _*))
     if (validateDisjoint) {
-      // overlapping corpora would silently double-count df/cf (a doc in
-      // both halves adds its tf twice); fail fast instead — the
-      // minhashPairsAgainstIndex guard pattern. limit(1) bounds the probe.
-      val overlap = a.toDF(cols: _*).select(col("id")).distinct()
-        .join(b.toDF(cols: _*).select(col("id")).distinct(), Seq("id"), "left_semi")
+      val overlap = ha.select(col("id")).distinct()
+        .join(hb.select(col("id")).distinct(), Seq("id"), "left_semi")
         .limit(1).count()
-      require(overlap == 0,
-        "mergeChampionIndexes: halves share document ids — corpora must be disjoint")
+      require(overlap == 0, s"$op: halves share document ids — corpora must be disjoint")
     }
-    // positional rename: championIndex output is (term, df, cf, rank, idCol, tf);
     // the half tag keeps the per-term stats rows distinct even when both
     // halves coincidentally share identical (df, cf)
-    val u = a.toDF(cols: _*).withColumn("__half", lit(0))
-      .unionByName(b.toDF(cols: _*).withColumn("__half", lit(1)))
+    val u = ha.withColumn("__half", lit(0)).unionByName(hb.withColumn("__half", lit(1)))
     val stats = u.select(col("__half"), col("term"), col("df"), col("cf")).distinct()
       .groupBy(col("term"))
       .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
       .filter(col("df") >= minDf)
-    val champs = graft.plans.GroupTopK.topK(
-      u.select(col("term"), col("id"), col("tf")),
-      Seq("term"), Seq(col("tf").desc, col("id").asc), m)
-    val w = Window.partitionBy(col("term"))
-      .orderBy(col("tf").desc, col("id").asc)
-    champs.join(stats, Seq("term"))
-      .withColumn("rank", row_number().over(w))
-      .select(col("term"), col("df"), col("cf"), col("rank"), col("id"), col("tf"))
+    // each posting: term plus every column after (df, cf, rank)
+    val postings = u.select((col("term") +: cols.drop(4).map(col)): _*)
+    rankedTopK(postings, "term", Seq(col(ord).desc, col("id").asc), m)
+      .join(stats, Seq("term"))
+      .select(cols.map(col): _*)
   }
 
-  /** Index-only BM25 serving — score arbitrary queries FROM a stored
-    * champion index ([[championIndex]] output) without ever re-scanning
-    * corpus text: the early-termination serving path champion lists exist
-    * FOR (IIR §7.1.3). Per query term, only its ≤ m champion postings are
-    * candidates; idf comes from the index's df column. The index stores no
-    * per-doc lengths, so scoring is exact BM25 with b = 0 (no length
-    * normalization): contribution = idf(t) * tf(k1+1)/(tf+k1) — identical
-    * to [[bm25TopK]] run with `b = 0` whenever every query term's full
-    * posting list survived into the champions (m ≥ df), which is the
-    * RankSpec equivalence pin.
-    *
-    * Scale shape (100 TB corpus, arbitrary query load):
-    *  - the corpus never participates: the only scan is the INDEX, filtered
-    *    to the query vocabulary (an isin pushed into the index's parquet
-    *    scan), ≤ |terms|·m rows.
-    *  - one bounded driver collect of (term, df) — query-vocabulary-sized,
-    *    the [[bm25Scores]] stats-row convention — turns idf into
-    *    driver-embedded literals; query membership and contributions are
-    *    then a map-side typed-literal lookup + explode, NO join.
-    *  - the (query, doc) sum is a hash agg over candidate-sized input,
-    *    then GroupTopKExec's bounded per-query prune.
-    *
-    * Determinism: same integer micro-unit floors as [[bm25Scores]]; the
-    * q111 oracle replays the identical left-associated double arithmetic
-    * index-side.
+  private def requireServe(op: String, nDocs: Long, kTop: Int,
+                           avgdl: Double = 1.0): Unit = {
+    require(nDocs > 0, s"$op: nDocs must be positive")
+    require(avgdl > 0, s"$op: avgdl must be positive")
+    require(kTop > 0, s"$op: kTop must be positive")
+  }
+
+  /** Map front end: the query vocabulary is an `isin` filter pushed into
+    * the index scan, and each posting fans out to its queries through a
+    * typed-literal lookup + explode — no join and no driver action. */
+  private def mapCandidates(idx: DataFrame, queries: Map[String, Seq[String]],
+                            lowercase: Boolean, op: String): DataFrame = {
+    val qTerms = queryTerms(queries, lowercase, op)
+    val allTerms = qTerms.values.flatten.toSeq.distinct.sorted
+    val termQueries: Map[String, Seq[String]] = allTerms.map(t =>
+      t -> qTerms.filter(_._2.contains(t)).keys.toSeq.sorted).toMap
+    idx.filter(col("term").isin(allTerms: _*))
+      .withColumn("query_id", explode(typedlit(termQueries).getItem(col("term"))))
+  }
+
+  /** Frame front end: (query_id, term) rows, case-folded and deduplicated,
+    * meet the index in ONE equi-join on term. Join sides are left to
+    * Catalyst/AQE: the index is ≤ m rows per term, the query side is the
+    * batch — the smaller broadcasts, and a skewed hot term splits. */
+  private def frameCandidates(idx: DataFrame, queries: DataFrame,
+                              lowercase: Boolean, op: String): DataFrame = {
+    require(queries.columns.contains("query_id") && queries.columns.contains("term"),
+      s"$op: queries needs (query_id, term) columns")
+    val qterm = if (lowercase) lower(col("term")) else col("term")
+    idx.join(queries.select(col("query_id"), qterm.as("term")).distinct(), Seq("term"))
+  }
+
+  /** The one BM25 serve body over candidate postings (query_id, id, tf,
+    * df, ...): idf is a codegen'd column over the index's df (Spark's
+    * `log`, i.e. `StrictMath.log`), `norm` the length normalization, and
+    * the (query, doc) sums a candidate-sized hash agg before
+    * [[rankedTopK]]. Docs scoring 0 are dropped. */
+  private def serve(cands: DataFrame, nDocs: Long, kTop: Int, k1: Double,
+                    norm: Column): DataFrame = {
+    val idf = floor(lit(1e6) *
+      log(lit(1.0) + (lit(nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
+      .cast("double")
+    val sc = cands.withColumn("__c", contribution(idf, col("tf").cast("double"), k1, norm))
+      .groupBy(col("query_id"), col("id"))
+      .agg(sum(col("__c")).as("score_micro"))
+      .filter(col("score_micro") > 0)
+    rankedTopK(sc, "query_id", Seq(col("score_micro").desc, col("id").asc), kTop)
+  }
+
+  /** Index-only BM25 serving from a stored [[championIndex]] — the
+    * early-termination path champion lists exist for (IIR §7.1.3): the
+    * corpus never participates, only each query term's ≤ m champion
+    * postings are candidates, and idf comes from the index's df column.
+    * The index stores no doc lengths, so this is exact BM25 with b = 0,
+    * contribution idf(t) * tf(k1+1)/(tf+k1) — equal to [[bm25TopK]] at
+    * `b = 0` whenever m ≥ every query term's df (the RankSpec pin). Query
+    * terms absent from the index contribute no candidates.
     *
     * @param nDocs corpus size N for idf — index metadata the caller
     *              carries (the index itself only knows surviving terms).
@@ -435,95 +400,20 @@ object Rank {
   def bm25FromIndex(index: DataFrame, nDocs: Long,
                     queries: Map[String, Seq[String]], kTop: Int,
                     k1: Double = 1.2, lowercase: Boolean = true): DataFrame = {
-    require(nDocs > 0, "bm25FromIndex: nDocs must be positive")
-    require(kTop > 0, "bm25FromIndex: kTop must be positive")
-    require(queries.nonEmpty, "bm25FromIndex: need at least one query")
-    val norm: String => String = t => if (lowercase) t.toLowerCase else t
-    val qTerms = queries.map { case (q, ts) =>
-      val n = ts.map(norm).distinct
-      require(n.nonEmpty, s"bm25FromIndex: query '$q' has no terms")
-      q -> n
-    }
-    val allTerms = qTerms.values.flatten.toSeq.distinct.sorted
-    val idx = index.toDF("term", "df", "cf", "rank", "id", "tf")
-    val postings = idx.filter(col("term").isin(allTerms: _*))
-    // bounded driver collect: one (term, df) row per query-vocabulary term
-    // actually present in the index (absent terms simply contribute no
-    // candidates — the serving contract, not an error)
-    val dfs = postings.select(col("term"), col("df")).distinct()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val idf: Map[String, Long] = dfs.map { case (t, dft) =>
-      t -> math.floor(1e6 * math.log(1.0 + (nDocs - dft + 0.5) / (dft + 0.5))).toLong
-    }
-    val termQueries: Map[String, Seq[String]] = allTerms.map(t =>
-      t -> qTerms.collect { case (q, ts) if ts.contains(t) => q }.toSeq.sorted).toMap
-    val scored = postings
-      .select(col("id"), col("term"), col("tf"),
-        explode(typedlit(termQueries).getItem(col("term"))).as("query_id"))
-      .withColumn("__c",
-        floor(typedlit(idf).getItem(col("term")).cast("double") *
-          ((col("tf").cast("double") * lit(k1 + 1)) /
-            (col("tf").cast("double") + lit(k1)))).cast("long"))
-    val sc = scored.groupBy(col("query_id"), col("id"))
-      .agg(sum(col("__c")).as("score_micro"))
-      .filter(col("score_micro") > 0)
-    val pruned = graft.plans.GroupTopK.topK(
-      sc, Seq("query_id"), Seq(col("score_micro").desc, col("id").asc), kTop)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score_micro").desc, col("id").asc)
-    pruned.withColumn("rank", row_number().over(w)).filter(col("rank") <= kTop)
+    requireServe("bm25FromIndex", nDocs, kTop)
+    serve(mapCandidates(index.toDF(TfIndexCols: _*), queries, lowercase, "bm25FromIndex"),
+      nDocs, kTop, k1, lit(1.0))
   }
 
-  /** [[bm25FromIndex]] for BATCH query loads — queries arrive as a
-    * DataFrame of (query_id, term) rows instead of a driver Map. The Map
-    * form embeds the query set as typed literals (no join — unbeatable for
-    * probe-sized sets, but a 100k-query batch would bloat the plan and the
-    * driver); this overload keeps everything distributed: ONE equi-join on
-    * `term` both filters the index to the batch vocabulary and fans each
-    * posting out to the queries containing its term, and idf is computed
-    * index-side from the df column as a codegen'd expression — NO driver
-    * collect anywhere. Join sides are left to Catalyst/AQE: the index side
-    * is ≤ m rows per term by construction, the query side is the batch —
-    * whichever is smaller broadcasts, and a skewed hot term splits under
-    * AQE. Scoring, flooring, and ranking are bit-identical to the Map form
-    * (same left-associated double arithmetic; `math.log` and Spark's `log`
-    * are both `java.lang.Math.log`) — the RankSpec equivalence pin.
-    *
-    * Like the Map form this is the b=0 tf-index serve; terms absent from
-    * the index simply contribute no candidates (inner join), and query
-    * terms are deduplicated per query before scoring, matching the Map
-    * form's `distinct`.
-    *
-    * @param queries (query_id, term) rows; extra columns are ignored.
-    * @return (query_id, id, score_micro, rank), rank 1..kTop per query by
-    *         (score desc, id asc); docs scoring 0 dropped. */
+  /** [[bm25FromIndex]] for BATCH query loads: queries arrive as (query_id,
+    * term) rows (extra columns ignored), so a 100k-query batch stays
+    * distributed instead of becoming plan literals. Scores are the Map
+    * form's (the RankSpec equivalence pin). */
   def bm25FromIndex(index: DataFrame, nDocs: Long, queries: DataFrame,
                     kTop: Int, k1: Double, lowercase: Boolean): DataFrame = {
-    require(nDocs > 0, "bm25FromIndex: nDocs must be positive")
-    require(kTop > 0, "bm25FromIndex: kTop must be positive")
-    require(queries.columns.contains("query_id") && queries.columns.contains("term"),
-      "bm25FromIndex: queries needs (query_id, term) columns")
-    val qterm = if (lowercase) lower(col("term")) else col("term")
-    val q = queries.select(col("query_id"), qterm.as("term")).distinct()
-    val idx = index.toDF("term", "df", "cf", "rank", "id", "tf")
-    // idf from the index's df column — the driver Map's arithmetic as a
-    // codegen'd column: floor(1e6 * ln(1 + (N - df + 0.5)/(df + 0.5)))
-    val idfCol = floor(lit(1e6) *
-      log(lit(1.0) + (lit(nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
-      .cast("double")
-    val scored = idx.join(q, Seq("term"))
-      .withColumn("__c",
-        floor(idfCol *
-          ((col("tf").cast("double") * lit(k1 + 1)) /
-            (col("tf").cast("double") + lit(k1)))).cast("long"))
-    val sc = scored.groupBy(col("query_id"), col("id"))
-      .agg(sum(col("__c")).as("score_micro"))
-      .filter(col("score_micro") > 0)
-    val pruned = graft.plans.GroupTopK.topK(
-      sc, Seq("query_id"), Seq(col("score_micro").desc, col("id").asc), kTop)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score_micro").desc, col("id").asc)
-    pruned.withColumn("rank", row_number().over(w)).filter(col("rank") <= kTop)
+    requireServe("bm25FromIndex", nDocs, kTop)
+    serve(frameCandidates(index.toDF(TfIndexCols: _*), queries, lowercase, "bm25FromIndex"),
+      nDocs, kTop, k1, lit(1.0))
   }
 
   /** [[bm25FromIndex]] batch overload with the Map form's defaults. */
@@ -531,127 +421,33 @@ object Rank {
                          kTop: Int): DataFrame =
     bm25FromIndex(index, nDocs, queries, kTop, k1 = 1.2, lowercase = true)
 
-  /** Index-only BM25 serving over an IMPACT-ordered champion index
-    * ([[championIndexImpact]] output) — [[bm25FromIndex]] with the length
-    * normalization the tf-ordered index cannot express: the impact index
-    * stores each posting's (tf, dl), so serving recomputes the exact
-    * b=0.75 (or any b) BM25 ratio per candidate and multiplies by idf from
-    * the index's df column. The stored `impact_micro` chose WHICH postings
-    * are champions (and is a floored value, so it is not used for the
-    * score itself); with `m >= df` every posting survives and the result
-    * is bit-identical to [[bm25TopK]] over the corpus — the RankSpec
-    * equivalence pin.
+  /** [[bm25FromIndex]] over a [[championIndexImpact]] index, whose stored
+    * (tf, dl) let serving replay the full length-normalized BM25 per
+    * candidate (`impact_micro` only chose the champions). With m ≥ every
+    * query term's df the result equals [[bm25TopK]] over the corpus (the
+    * RankSpec pin).
     *
-    * Scale shape is [[bm25FromIndex]]'s exactly: the only scan is the
-    * index filtered to the query vocabulary (isin pushed to parquet,
-    * <= |terms|*m rows), one query-vocabulary-sized (term, df) driver
-    * collect for idf literals, typed-literal membership lookup (no join),
-    * candidate-sized hash agg, GroupTopK prune.
-    *
-    * @param nDocs corpus size N for idf (index metadata, as in
-    *              [[bm25FromIndex]]).
     * @param avgdl the normalization length the index was built with —
-    *              `fixedAvgdl` for incremental builds, else the corpus
-    *              average the build measured; index metadata the caller
-    *              carries alongside nDocs.
-    * @return (query_id, id, score_micro, rank), rank 1..kTop per query by
-    *         (score desc, id asc); docs scoring 0 dropped. */
+    *              `fixedAvgdl`, or the corpus average the build measured;
+    *              index metadata the caller carries alongside nDocs.
+    * @return (query_id, id, score_micro, rank), as [[bm25FromIndex]]. */
   def bm25FromIndexImpact(index: DataFrame, nDocs: Long, avgdl: Double,
                           queries: Map[String, Seq[String]], kTop: Int,
                           k1: Double = 1.2, b: Double = 0.75,
                           lowercase: Boolean = true): DataFrame = {
-    require(nDocs > 0, "bm25FromIndexImpact: nDocs must be positive")
-    require(avgdl > 0, "bm25FromIndexImpact: avgdl must be positive")
-    require(kTop > 0, "bm25FromIndexImpact: kTop must be positive")
-    require(queries.nonEmpty, "bm25FromIndexImpact: need at least one query")
-    val norm: String => String = t => if (lowercase) t.toLowerCase else t
-    val qTerms = queries.map { case (q, ts) =>
-      val n = ts.map(norm).distinct
-      require(n.nonEmpty, s"bm25FromIndexImpact: query '$q' has no terms")
-      q -> n
-    }
-    val allTerms = qTerms.values.flatten.toSeq.distinct.sorted
-    val idx = index.toDF("term", "df", "cf", "rank", "id", "tf", "dl", "impact_micro")
-    val postings = idx.filter(col("term").isin(allTerms: _*))
-    val dfs = postings.select(col("term"), col("df")).distinct()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val idf: Map[String, Long] = dfs.map { case (t, dft) =>
-      t -> math.floor(1e6 * math.log(1.0 + (nDocs - dft + 0.5) / (dft + 0.5))).toLong
-    }
-    val termQueries: Map[String, Seq[String]] = allTerms.map(t =>
-      t -> qTerms.collect { case (q, ts) if ts.contains(t) => q }.toSeq.sorted).toMap
-    // the bm25Scores contribution, token-for-token (left-associated doubles)
-    // with tf/dl read from the index instead of a corpus pass
-    val scored = postings
-      .select(col("id"), col("term"), col("tf"), col("dl"),
-        explode(typedlit(termQueries).getItem(col("term"))).as("query_id"))
-      .withColumn("__c",
-        floor(typedlit(idf).getItem(col("term")).cast("double") *
-          ((col("tf").cast("double") * lit(k1 + 1)) /
-            (col("tf").cast("double") + lit(k1) *
-              (lit(1 - b) + lit(b) * col("dl").cast("double") / lit(avgdl))))).cast("long"))
-    val sc = scored.groupBy(col("query_id"), col("id"))
-      .agg(sum(col("__c")).as("score_micro"))
-      .filter(col("score_micro") > 0)
-    val pruned = graft.plans.GroupTopK.topK(
-      sc, Seq("query_id"), Seq(col("score_micro").desc, col("id").asc), kTop)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score_micro").desc, col("id").asc)
-    pruned.withColumn("rank", row_number().over(w)).filter(col("rank") <= kTop)
+    requireServe("bm25FromIndexImpact", nDocs, kTop, avgdl)
+    serve(mapCandidates(index.toDF(ImpactIndexCols: _*), queries, lowercase,
+      "bm25FromIndexImpact"), nDocs, kTop, k1, lengthNorm(col("dl"), b, avgdl))
   }
 
-  /** [[bm25FromIndexImpact]] for BATCH query loads — the impact-index
-    * mirror of the [[bm25FromIndex]] DataFrame overload, closing the
-    * serving family's last asymmetry: a 100k-query load on the
-    * NORMALIZED index now has the same scale path as the tf index.
-    * Queries arrive as (query_id, term) rows; ONE equi-join on `term`
-    * both filters the index to the batch vocabulary and fans each
-    * posting out to its queries, and BOTH idf (from df) and the b-length
-    * normalization (from the stored (tf, dl) and the avgdl literal) are
-    * codegen'd expressions — NO driver collect anywhere. Join sides are
-    * left to Catalyst/AQE exactly as in the tf overload. Scoring,
-    * flooring, and ranking are bit-identical to the Map form (same
-    * left-associated double arithmetic) — the RankSpec equivalence pin.
-    *
-    * Terms absent from the index contribute no candidates (inner join);
-    * query terms are deduplicated per query before scoring, matching the
-    * Map form's `distinct`.
-    *
-    * @param avgdl the normalization length the index was built with
-    *              (index metadata, as in [[bm25FromIndexImpact]]).
-    * @param queries (query_id, term) rows; extra columns are ignored.
-    * @return (query_id, id, score_micro, rank), rank 1..kTop per query by
-    *         (score desc, id asc); docs scoring 0 dropped. */
+  /** [[bm25FromIndexImpact]] for BATCH query loads, as the
+    * [[bm25FromIndex]] DataFrame overload. */
   def bm25FromIndexImpact(index: DataFrame, nDocs: Long, avgdl: Double,
                           queries: DataFrame, kTop: Int, k1: Double,
                           b: Double, lowercase: Boolean): DataFrame = {
-    require(nDocs > 0, "bm25FromIndexImpact: nDocs must be positive")
-    require(avgdl > 0, "bm25FromIndexImpact: avgdl must be positive")
-    require(kTop > 0, "bm25FromIndexImpact: kTop must be positive")
-    require(queries.columns.contains("query_id") && queries.columns.contains("term"),
-      "bm25FromIndexImpact: queries needs (query_id, term) columns")
-    val qterm = if (lowercase) lower(col("term")) else col("term")
-    val q = queries.select(col("query_id"), qterm.as("term")).distinct()
-    val idx = index.toDF("term", "df", "cf", "rank", "id", "tf", "dl", "impact_micro")
-    // idf from the index's df column — the driver Map's arithmetic as a
-    // codegen'd column: floor(1e6 * ln(1 + (N - df + 0.5)/(df + 0.5)))
-    val idfCol = floor(lit(1e6) *
-      log(lit(1.0) + (lit(nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
-      .cast("double")
-    val scored = idx.join(q, Seq("term"))
-      .withColumn("__c",
-        floor(idfCol *
-          ((col("tf").cast("double") * lit(k1 + 1)) /
-            (col("tf").cast("double") + lit(k1) *
-              (lit(1 - b) + lit(b) * col("dl").cast("double") / lit(avgdl))))).cast("long"))
-    val sc = scored.groupBy(col("query_id"), col("id"))
-      .agg(sum(col("__c")).as("score_micro"))
-      .filter(col("score_micro") > 0)
-    val pruned = graft.plans.GroupTopK.topK(
-      sc, Seq("query_id"), Seq(col("score_micro").desc, col("id").asc), kTop)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score_micro").desc, col("id").asc)
-    pruned.withColumn("rank", row_number().over(w)).filter(col("rank") <= kTop)
+    requireServe("bm25FromIndexImpact", nDocs, kTop, avgdl)
+    serve(frameCandidates(index.toDF(ImpactIndexCols: _*), queries, lowercase,
+      "bm25FromIndexImpact"), nDocs, kTop, k1, lengthNorm(col("dl"), b, avgdl))
   }
 
   /** [[bm25FromIndexImpact]] batch overload with the Map form's defaults. */
@@ -659,20 +455,4 @@ object Rank {
                                queries: DataFrame, kTop: Int): DataFrame =
     bm25FromIndexImpact(index, nDocs, avgdl, queries, kTop,
       k1 = 1.2, b = 0.75, lowercase = true)
-
-  /** Top-k docs per query by BM25: (query_id, idCol, rank, score_micro).
-    * GroupTopKExec heap-prunes map-side before the only exchange; the rank
-    * window then sorts <= k rows per query, never the full score set. */
-  def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
-               queries: Map[String, Seq[String]], kTop: Int,
-               k1: Double = 1.2, b: Double = 0.75,
-               lowercase: Boolean = true): DataFrame = {
-    require(kTop > 0, "bm25TopK: kTop must be positive")
-    val scored = bm25Scores(docs, idCol, textCol, queries, k1, b, lowercase)
-    val pruned = graft.plans.GroupTopK.topK(
-      scored, Seq("query_id"), Seq(col("score_micro").desc, col(idCol).asc), kTop)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score_micro").desc, col(idCol).asc)
-    pruned.withColumn("rank", row_number().over(w)).filter(col("rank") <= kTop)
-  }
 }

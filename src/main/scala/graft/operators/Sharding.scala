@@ -23,10 +23,13 @@ import org.apache.spark.sql.types.LongType
   *   3. a map-side pass adds partition offset + local running sum: each
   *      row's global start offset, `shard_id = start / budgetTokens`.
   *
-  * The assignment is INVARIANT to the range boundaries the sampler picks:
-  * any range partitioning that respects the total order gives every row
-  * the same global exclusive prefix sum, hence the same shard — so
-  * RangePartitioner's sampling cannot perturb membership between runs.
+  * Both passes must read ONE range partitioning: every execution of a
+  * range exchange samples its own boundaries (RangePartitioner seeds its
+  * reservoir with the sampled RDD's id, new on each run), and subtotals
+  * taken over one set of boundaries give wrong offsets on another. So the
+  * sorted, range-partitioned input is local-checkpointed once and both
+  * passes run over that checkpoint; the result is then the global
+  * exclusive prefix sum for any boundaries the sampler drew.
   * A document landing astride a budget boundary belongs to the shard its
   * START offset falls in (shards overflow by at most one document, never
   * split one).
@@ -37,9 +40,10 @@ import org.apache.spark.sql.types.LongType
   * is the canonical choice — it decorrelates shard membership from
   * ingest order, so every shard is an unbiased corpus sample.
   *
-  * The input is computed twice (subtotal pass + assignment pass) — cache
-  * the input or read from columnar storage where the second scan prunes
-  * to the order/token columns.
+  * The input is computed once, by the eager checkpoint when
+  * `assignShards` is called. The checkpoint is input-sized and an artifact
+  * the caller owns: it lives as long as the returned frame, like
+  * [[HybridServe.buildWith]]'s.
   */
 object Sharding {
 
@@ -55,8 +59,9 @@ object Sharding {
     val oc = orderCols.map(col)
     // null token counts weigh 0 (a null would NPE the primitive getLong)
     val withTok = df.withColumn("__tok", coalesce(col(tokenCol).cast(LongType), lit(0L)))
+    // one execution of the range exchange: both passes read its partitions
     val parted = withTok.repartitionByRange(n, oc: _*)
-      .sortWithinPartitions(oc: _*)
+      .sortWithinPartitions(oc: _*).localCheckpoint()
 
     // pass 1: per-partition subtotals — one (pid, sum) row per partition
     implicit val tupEnc = Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong)

@@ -298,18 +298,16 @@ object GroupTopK {
     * arrival order, which is partitioning-dependent — nondeterministic
     * output that this repo's oracle-parity contract forbids.
     *
-    * Installs [[GroupTopKStrategy]] on first use (synchronized, skipped
-    * when a GraftExtensions-wired session already registered it) — no
-    * SparkSessionExtensions wiring needed. */
+    * The session must plan [[GroupTopKNode]]: build it with
+    * `spark.sql.extensions=graft.plans.GraftExtensions` (as
+    * `graft.GraftSession.local` does), which injects [[GroupTopKStrategy]]. */
   def topK(df: DataFrame, groupCols: Seq[String], orderBy: Seq[Column], k: Int): DataFrame = {
     require(k > 0, "k must be positive")
-    val spark = df.sparkSession
-    val classicSpark = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val classicSpark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val bridge = org.apache.spark.sql.classic.GraftPlanBridge
-    spark.experimental.synchronized {
-      if (!bridge.hasStrategy(classicSpark, GroupTopKStrategy))
-        spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ GroupTopKStrategy
-    }
+    require(bridge.hasStrategy(classicSpark, GroupTopKStrategy),
+      "GroupTopK.topK: the session has no GroupTopKStrategy; build it with " +
+        "spark.sql.extensions=graft.plans.GraftExtensions")
     val plan = df.queryExecution.analyzed
     // honor the session's spark.sql.caseSensitive; fail on ambiguity
     // instead of silently binding the first match

@@ -144,8 +144,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // instead of once per row (r15 — see FoldConstantUdfRule)
     ext.injectOptimizerRule(_ => FoldConstantUdfRule)
     // whole-operator §2.14 exemplar; the strategy only matches
-    // GroupTopKNode, so injecting it is inert for all other plans
-    // (GroupTopK.topK also self-installs for sessions without extensions)
+    // GroupTopKNode, so injecting it is inert for all other plans. This is
+    // the one place the rules and the strategy are wired: GroupTopK.topK
+    // requires a session built with these extensions
     ext.injectPlannerStrategy(_ => GroupTopKStrategy)
   }
 }

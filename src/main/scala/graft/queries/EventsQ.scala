@@ -15,19 +15,6 @@ object EventsQ {
 
   private def ev(s: SparkSession, d: String) = Tables.load(s, d, "events")
 
-  /** One rules-installed isolated session per parent session, memoized so
-    * Bench reps don't time SessionState construction as query work. */
-  private val ruleSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-  private[queries] def ruleSession(s: SparkSession): SparkSession =
-    ruleSessions.computeIfAbsent(s, { parent =>
-      val iso = parent.newSession()
-      iso.experimental.extraOptimizations =
-        Seq(graft.plans.TopOnePerKeyRule, graft.plans.TopKPerKeyRule)
-      iso.experimental.extraStrategies = Seq(graft.plans.GroupTopKStrategy)
-      iso
-    })
-
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef("q18_scalar_funcs",
@@ -135,19 +122,16 @@ object EventsQ {
     QueryDef("q70_topk_rewrite",
       // The §2.14 optimizer rules under oracle coverage: the query is the
       // PLAIN window form — row_number over (user_id ORDER BY ts DESC,
-      // event_id DESC) filtered to rn <= 2 — built on an isolated session
-      // with TopOnePerKeyRule/TopKPerKeyRule + GroupTopKStrategy
-      // installed, so the optimizer itself swaps in the heap operator
-      // (no sort of the events, shuffle moves <= 2 rows per user per
-      // input partition) and the driver hash-checks that the REWRITTEN
-      // plan is value-identical to DuckDB's window semantics. The
-      // isolated session shares the SparkContext; session state
-      // (extraOptimizations) never leaks into the other queries' plans.
+      // event_id DESC) filtered to rn <= 2. The session's GraftExtensions
+      // (TopOnePerKeyRule/TopKPerKeyRule + GroupTopKStrategy) make the
+      // optimizer itself swap in the heap operator (no sort of the events,
+      // shuffle moves <= 2 rows per user per input partition), and the
+      // driver hash-checks that the REWRITTEN plan is value-identical to
+      // DuckDB's window semantics.
       (s, d) => {
-        val iso = EventsQ.ruleSession(s)
         val w = Window.partitionBy(col("user_id"))
           .orderBy(col("ts").desc, col("event_id").desc)
-        ev(iso, d)
+        ev(s, d)
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 2)
           .select(col("user_id"), col("rn").cast("long").as("rn"),

@@ -2510,11 +2510,10 @@ object TextQ {
       // minDf=50). Candidates are champion postings only, idf comes from
       // the index's df column, and b=0 because the index stores no doc
       // lengths — corpus text is never re-scanned (the corpus contributes
-      // only its doc count N). idf literals come from one query-
-      // vocabulary-sized driver collect; membership + contribution are a
-      // map-side typed-literal lookup, so serving adds NO join. The
-      // oracle replays the index CTEs, then the identical left-
-      // associated double arithmetic index-side.
+      // only its doc count N). idf is a column over the index's df and
+      // query membership a map-side typed-literal lookup, so serving adds
+      // NO join and no driver action. The oracle replays the index CTEs,
+      // then the identical left-associated double arithmetic index-side.
       (s, d) => {
         val corpus = docs(s, d)
         val index = Rank.championIndex(corpus, "doc_id", "text",
@@ -2644,7 +2643,7 @@ object TextQ {
       // champions scores now match corpus-side bm25TopK arithmetic
       // exactly. The corpus contributes only its metadata (N, avgdl — one
       // native no-UDF stats action); candidates are champion postings
-      // only, idf is a query-vocabulary driver collect, membership a
+      // only, idf is a column over the index's df, membership a
       // typed-literal lookup — NO join, no corpus re-scan. The oracle
       // chains q112's index CTEs with q111's serving CTEs, swapping in
       // the normalized contribution.

@@ -32,9 +32,7 @@ object GraftPlanBridge {
   def staticExpr(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
     ExpressionUtils.expression(c)
 
-  /** Whether a planner strategy is already registered (via extensions or
-    * experimental strategies). */
+  /** Whether the session's planner runs strategy `s`. */
   def hasStrategy(spark: SparkSession, s: org.apache.spark.sql.execution.SparkStrategy): Boolean =
-    spark.sessionState.planner.strategies.contains(s) ||
-      spark.experimental.extraStrategies.contains(s)
+    spark.sessionState.planner.strategies.contains(s)
 }

@@ -33,6 +33,21 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** `read` over `q` planned with the engine's top-k rewrites
+    * (TopOnePerKeyRule, TopKPerKeyRule) excluded from the optimizer: the
+    * plain window form a rewrite must match. Asserts that the plan really
+    * has neither rewrite in it. */
+  def withoutTopKRules[T](q: => org.apache.spark.sql.DataFrame)(
+      read: org.apache.spark.sql.DataFrame => T): T =
+    withConf("spark.sql.optimizer.excludedRules" ->
+        "graft.plans.TopOnePerKeyRule,graft.plans.TopKPerKeyRule") {
+      val df = q
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.collect { case n: graft.plans.GroupTopKNode => n }.isEmpty &&
+        !plan.toString.contains("max_by"), plan.toString)
+      read(df)
+    }
+
   /** Occurrences of `needle` in a rendered plan string — shared by the
     * plan-shape assertions across suites. */
   def planCount(plan: String, needle: String): Int =

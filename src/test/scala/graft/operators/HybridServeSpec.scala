@@ -445,6 +445,16 @@ class HybridServeSpec extends SparkSpec {
     } finally sc.setJobDescription(null)
   }
 
+  test("every job a build runs is described by build phase: both model fits and both stores") {
+    val cfg = HybridServe.BuildConfig(ivfK = 2, pqKsub = 2, iters = 1)
+    // an undescribed job would carry the caller's description instead
+    val (_, tags) = jobTags(Phase.described(spark, "caller")(HybridServe.build(
+      corpus, "doc_id", "text", embeddings, "vec_id", "embedding", cfg)))
+    assert(tags.forall(_.startsWith("serve.build.")), tags.toString)
+    assert(tags.toSet == Set("serve.build.ivf", "serve.build.pq",
+      "serve.build.index", "serve.build.cells"), tags.toString)
+  }
+
   test("serving a removed set adds no exchange: the stale anti-joins broadcast, and the cells scan keeps its partition filter") {
     val root = java.nio.file.Files.createTempDirectory("graft_hybrid_rmplan").toString
     try {

@@ -208,6 +208,16 @@ class RankSpec extends SparkSpec {
       val plan = served.queryExecution.executedPlan.toString
       assert(plan.contains("PushedFilters: [In(term"), plan.take(3000))
       assert(!plan.contains("Join"), plan.take(3000))
+      // building either Map-form serve runs no Spark job: idf is a column
+      // over the index's df, not a driver collect
+      val stored = spark.read.parquet(dir)
+      val impact = Rank.championIndexImpact(corpus, "doc_id", "text", m = 2,
+        fixedAvgdl = Some(3.5))
+      val (_, tags) = jobTags(Phase.described(spark, "rank.plan") {
+        Rank.bm25FromIndex(stored, 4L, Map("q" -> Seq("spark", "scan")), kTop = 3)
+        Rank.bm25FromIndexImpact(impact, 4L, 3.5, Map("q" -> Seq("spark")), kTop = 3)
+      })
+      assert(tags.isEmpty, tags)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }

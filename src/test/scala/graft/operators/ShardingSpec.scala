@@ -35,6 +35,15 @@ class ShardingSpec extends SparkSpec {
     assert(assigned(100L, 32) == ref)
   }
 
+  test("assignment holds under a coarse range sampler: both passes read one partitioning") {
+    // a 1-row sample per partition makes every execution of the range
+    // exchange draw its own boundaries
+    val ref = windowReference(100L)
+    withConf("spark.sql.execution.rangeExchange.sampleSizePerPartition" -> "1") {
+      (1 to 4).foreach(_ => assert(assigned(100L, 8) == ref))
+    }
+  }
+
   test("shards are contiguous in the total order and never split a doc") {
     val rows = Sharding.assignShards(corpus, "tok", 100L, Seq("ord", "id"), 8)
       .select(col("ord"), col("id"), col("tok"), col("shard_id"))

@@ -5,18 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class TopKPerKeyRuleSpec extends SparkSpec {
-  // isolated session: extraOptimizations/extraStrategies are session state
-  // and must not leak into the other suites sharing TestSpark
-  override lazy val spark: org.apache.spark.sql.SparkSession = {
-    val s = graft.TestSpark.spark.newSession()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  // the shared session runs the rules and the strategy through GraftExtensions
   import spark.implicits._
-
-  // session-level install for tests; production uses GraftExtensions
-  spark.experimental.extraOptimizations = Seq(TopOnePerKeyRule, TopKPerKeyRule)
-  spark.experimental.extraStrategies = Seq(GroupTopKStrategy)
 
   private val df = Seq(
     (1L, 1L, 10L), (1L, 2L, 20L), (1L, 3L, 30L), (1L, 4L, 40L),
@@ -33,12 +23,9 @@ class TopKPerKeyRuleSpec extends SparkSpec {
     assert(topKNodes(q).nonEmpty)
     assert(!q.queryExecution.optimizedPlan.toString.contains("Filter"))
     val got = q.orderBy("g", "rn").as[(Long, Long, Long, Int)].collect().toSeq
-    // plain session (no rules) computes the reference answer
-    val ref = graft.TestSpark.spark.newSession()
-    import ref.implicits._
-    val expected = df.as[(Long, Long, Long)].collect().toSeq.toDS().toDF("g", "id", "score")
-      .withColumn("rn", row_number().over(w)).filter($"rn" <= 2)
-      .orderBy("g", "rn").as[(Long, Long, Long, Int)].collect().toSeq
+    val expected = withoutTopKRules(
+      df.withColumn("rn", row_number().over(w)).filter($"rn" <= 2).orderBy("g", "rn"))(
+      _.as[(Long, Long, Long, Int)].collect().toSeq)
     assert(got == expected)
   }
 

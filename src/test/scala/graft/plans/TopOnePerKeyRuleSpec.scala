@@ -5,18 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class TopOnePerKeyRuleSpec extends SparkSpec {
-  // isolated session: extraOptimizations is session state, and the rule
-  // must not leak into the other suites sharing TestSpark
-  override lazy val spark: org.apache.spark.sql.SparkSession = {
-    val s = graft.TestSpark.spark.newSession()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  // the shared session runs the rule through GraftExtensions
   import spark.implicits._
-
-  // session-level install for tests; production uses GraftExtensions
-  // (spark.sql.extensions=graft.plans.GraftExtensions)
-  spark.experimental.extraOptimizations = Seq(TopOnePerKeyRule)
 
   private val df = Seq(
     (1L, 1L, 10L, "a"), (1L, 2L, 20L, "b"), (1L, 5L, 20L, "e"),
@@ -69,13 +59,10 @@ class TopOnePerKeyRuleSpec extends SparkSpec {
     val big = (1 to 2000).map { i =>
       (i % 37L, i.toLong, (i * 2654435761L) % 1000L, s"e$i")
     }.toDF("user_id", "event_id", "ts", "event_type")
-    val rewritten = big.withColumn("rn", row_number().over(w)).filter($"rn" === 1).drop("rn")
-      .as[(Long, Long, Long, String)].collect().toSet
-    // reference computed without the rule
-    spark.experimental.extraOptimizations = Seq.empty
-    val reference = big.withColumn("rn", row_number().over(w)).filter($"rn" === 1).drop("rn")
-      .as[(Long, Long, Long, String)].collect().toSet
-    spark.experimental.extraOptimizations = Seq(TopOnePerKeyRule)
-    assert(rewritten == reference)
+    def q = big.withColumn("rn", row_number().over(w)).filter($"rn" === 1).drop("rn")
+    val rewritten = q
+    val reference = withoutTopKRules(q)(_.as[(Long, Long, Long, String)].collect().toSet)
+    assert(rewritten.as[(Long, Long, Long, String)].collect().toSet == reference)
+    assert(rewritten.queryExecution.optimizedPlan.toString.contains("max_by"))
   }
 }

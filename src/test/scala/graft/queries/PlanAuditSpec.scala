@@ -2,7 +2,10 @@ package graft.queries
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan audit of the declared queries (SURVEY.md §4): the scale
   * properties the engine is designed around — filter pushdown into the
@@ -23,11 +26,14 @@ class PlanAuditSpec extends SparkSpec {
 
   private def finalPlan(df: DataFrame): String = {
     df.queryExecution.toRdd.count() // materialize so AQE settles
-    (df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }).toString
+    settled(df.queryExecution.executedPlan)
   }
+
+  /** A run plan rendered as it ran: AQE's final plan when adaptive. */
+  private def settled(plan: SparkPlan): String = (plan match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan
+    case p => p
+  }).toString
 
   test("q01: filters are pushed into the parquet scan and columns pruned") {
     val plan = finalPlan(q("q01_filter_project"))
@@ -154,11 +160,27 @@ class PlanAuditSpec extends SparkSpec {
     // sort at scale; the engine must reproduce it with range partition +
     // broadcast offsets + map-side running sum, so the assignment side of
     // the plan has NO WindowExec and exactly one range Exchange
-    val plan = finalPlan(q("q100_token_shards"))
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = actions.add(f -> settled(qe.executedPlan))
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // jobTags waits until the shared listener queue, which also carries
+    // the execution listeners, has delivered every earlier event
+    val (df, _) = try jobTags(q("q100_token_shards"))
+      finally spark.listenerManager.unregister(listener)
+    val plan = finalPlan(df)
     assert(!plan.contains("Window"), plan.take(3000))
-    // exactly one range exchange on the content-hash total order (the
-    // assignment); the other rangepartitioning is the output ORDER BY
-    assert(planCount(plan, "Exchange rangepartitioning(h#") == 1, plan.take(3000))
+    // that one range exchange on the content-hash total order runs once,
+    // in assignShards' checkpoint, and both passes read the checkpoint: the
+    // final plan has none (its rangepartitioning is the output ORDER BY)
+    assert(planCount(plan, "Exchange rangepartitioning(h#") == 0, plan.take(3000))
+    val checkpoints = actions.asScala.collect { case ("localCheckpoint", p) => p }.toSeq
+    assert(checkpoints.size == 1 &&
+      planCount(checkpoints.head, "Exchange rangepartitioning(h#") == 1, actions)
   }
 
   test("q101: bucketed fact-fact join runs with no Exchange on the join key") {
