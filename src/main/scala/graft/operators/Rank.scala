@@ -88,12 +88,12 @@ object Rank {
   /** The one ranked top-k tail: GroupTopKExec's map-side heaps prune each
     * `group` to k rows before the only exchange (REPOSE-style pruning under
     * a global bound), then `rank` numbers those ≤ k rows 1..k by `order`,
-    * which must be total within a group. */
+    * which must be total within a group. GroupTopK already bounds each
+    * group, so no `rank <= k` filter follows. */
   private def rankedTopK(df: DataFrame, group: String, order: Seq[Column],
                          k: Int): DataFrame =
     graft.plans.GroupTopK.topK(df, Seq(group), order, k)
       .withColumn("rank", row_number().over(Window.partitionBy(col(group)).orderBy(order: _*)))
-      .filter(col("rank") <= k)
 
   /** BM25 scores of every doc against every query: (query_id, idCol,
     * score_micro), docs with no matching term (or a zero-micro score)

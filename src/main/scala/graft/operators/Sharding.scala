@@ -1,9 +1,11 @@
 package graft.operators
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+
+import scala.jdk.CollectionConverters._
 
 /** Token-budget sharding — the training-output stage a 100 TB corpus build
   * ends with: carve the curated corpus into shards of ~`budgetTokens`
@@ -26,10 +28,12 @@ import org.apache.spark.sql.types.LongType
   * Both passes must read ONE range partitioning: every execution of a
   * range exchange samples its own boundaries (RangePartitioner seeds its
   * reservoir with the sampled RDD's id, new on each run), and subtotals
-  * taken over one set of boundaries give wrong offsets on another. So the
-  * sorted, range-partitioned input is local-checkpointed once and both
-  * passes run over that checkpoint; the result is then the global
-  * exclusive prefix sum for any boundaries the sampler drew.
+  * taken over one set of boundaries give wrong offsets on another. So both
+  * passes map one RDD of the sorted, range-partitioned input: its exchange
+  * samples once, and the second pass re-reads that exchange's shuffle
+  * output (lost shuffle blocks are recomputed under the same boundaries).
+  * The result is then the global exclusive prefix sum for any boundaries
+  * the sampler drew.
   * A document landing astride a budget boundary belongs to the shard its
   * START offset falls in (shards overflow by at most one document, never
   * split one).
@@ -40,10 +44,10 @@ import org.apache.spark.sql.types.LongType
   * is the canonical choice — it decorrelates shard membership from
   * ingest order, so every shard is an unbiased corpus sample.
   *
-  * The input is computed once, by the eager checkpoint when
-  * `assignShards` is called. The checkpoint is input-sized and an artifact
-  * the caller owns: it lives as long as the returned frame, like
-  * [[HybridServe.buildWith]]'s.
+  * The input is computed and shuffled once, by the subtotal pass when
+  * `assignShards` is called; each later execution of the result re-sorts
+  * the shuffled partitions, and stores nothing beyond Spark's own shuffle
+  * files.
   */
 object Sharding {
 
@@ -59,34 +63,36 @@ object Sharding {
     val oc = orderCols.map(col)
     // null token counts weigh 0 (a null would NPE the primitive getLong)
     val withTok = df.withColumn("__tok", coalesce(col(tokenCol).cast(LongType), lit(0L)))
-    // one execution of the range exchange: both passes read its partitions
-    val parted = withTok.repartitionByRange(n, oc: _*)
-      .sortWithinPartitions(oc: _*).localCheckpoint()
+    val parted = withTok.repartitionByRange(n, oc: _*).sortWithinPartitions(oc: _*)
+    val tokIdx = parted.schema.fieldIndex("__tok")
 
-    // pass 1: per-partition subtotals — one (pid, sum) row per partition
-    implicit val tupEnc = Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong)
-    val subtotals = parted.select(col("__tok")).as(Encoders.scalaLong)
-      .mapPartitions { it =>
-        var s = 0L
-        it.foreach(s += _)
-        Iterator((TaskContext.getPartitionId(), s))
-      }.collect().sortBy(_._1)
+    // pass 1: per-partition subtotals — one (pid, sum) per partition. The
+    // action builds `parted.rdd`, whose one range exchange samples the
+    // boundaries; it runs as a SQL action, so listeners see its plan. An
+    // action's accumulator takes each partition's successful task once
+    val sums = spark.sparkContext.collectionAccumulator[(Int, Long)]("assignShards.subtotals")
+    parted.foreachPartition { (it: Iterator[Row]) =>
+      var s = 0L
+      it.foreach(r => s += r.getLong(tokIdx))
+      sums.add((TaskContext.getPartitionId(), s))
+    }
     val offsets = new Array[Long](n)
     var acc = 0L
-    subtotals.foreach { case (pid, s) => offsets(pid) = acc; acc += s }
+    sums.value.asScala.sortBy(_._1).foreach { case (pid, s) => offsets(pid) = acc; acc += s }
     val bcOffsets = spark.sparkContext.broadcast(offsets)
 
-    // pass 2: map-side global offset = partition offset + local running sum
-    val outSchema = parted.schema.add("shard_id", LongType, nullable = false)
-    val tokIdx = parted.schema.fieldIndex("__tok")
-    parted.mapPartitions { it =>
-      var run = bcOffsets.value(TaskContext.getPartitionId())
+    // pass 2: map-side global offset = partition offset + local running
+    // sum, over the same RDD and so the same boundaries
+    val assigned = parted.rdd.mapPartitionsWithIndex { (pid, it) =>
+      var run = bcOffsets.value(pid)
       it.map { r =>
         val start = run
         run += r.getLong(tokIdx)
         Row.fromSeq(r.toSeq :+ (start / budgetTokens))
       }
-    }(Encoders.row(outSchema)).drop("__tok")
+    }
+    spark.createDataFrame(assigned, parted.schema.add("shard_id", LongType, nullable = false))
+      .drop("__tok")
   }
 
   /** Materialize shards: one directory per shard (`shard_id=K/`), and

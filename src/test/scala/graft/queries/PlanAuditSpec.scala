@@ -175,12 +175,14 @@ class PlanAuditSpec extends SparkSpec {
     val plan = finalPlan(df)
     assert(!plan.contains("Window"), plan.take(3000))
     // that one range exchange on the content-hash total order runs once,
-    // in assignShards' checkpoint, and both passes read the checkpoint: the
-    // final plan has none (its rangepartitioning is the output ORDER BY)
+    // in assignShards' subtotal action, and the assignment pass re-reads
+    // its RDD: the final plan has none (its rangepartitioning is the
+    // output ORDER BY), and neither half of the computation has a Window
     assert(planCount(plan, "Exchange rangepartitioning(h#") == 0, plan.take(3000))
-    val checkpoints = actions.asScala.collect { case ("localCheckpoint", p) => p }.toSeq
-    assert(checkpoints.size == 1 &&
-      planCount(checkpoints.head, "Exchange rangepartitioning(h#") == 1, actions)
+    val passes = actions.asScala.collect { case ("foreachPartition", p) => p }.toSeq
+    assert(passes.size == 1 &&
+      planCount(passes.head, "Exchange rangepartitioning(h#") == 1, actions)
+    assert(!passes.head.contains("Window"), passes.head.take(3000))
   }
 
   test("q101: bucketed fact-fact join runs with no Exchange on the join key") {
